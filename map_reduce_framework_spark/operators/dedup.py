@@ -1426,25 +1426,6 @@ def dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def shingle_hashes_col(sh_col: str = "sh") -> Column:
-    """Base hashes of a shingle array: h60(s) mod P, one array pass."""
-    return F.expr(
-        f"transform({sh_col}, s -> "
-        f"CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT) % {MINHASH_PRIME}L)"
-    )
-
-
-def minhash_signature_col(hs_col: str = "hs") -> Column:
-    """12-element MinHash signature from a base-hash array column:
-    ``min over shingles of (a_i * h + b_i) mod P`` per coefficient pair —
-    pure array transforms, no UDF, no explode."""
-    mins = ", ".join(
-        f"array_min(transform({hs_col}, x -> (x * {a}L + {b}L) % {MINHASH_PRIME}L))"
-        for a, b in MINHASH_COEFFS
-    )
-    return F.expr(f"array({mins})")
-
-
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup: signature → 4 bands × 3 rows → bucket join →
     exact-Jaccard verify ≥ 0.8.
@@ -2339,15 +2320,6 @@ def norm_col(a: str) -> Column:
             f" (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))"
         )
     )
-
-
-def cosine_col(a: str, b: str) -> Column:
-    """Cosine similarity of two array<float> columns.
-
-    Prefer :func:`unit_vector_col` per side before a pair join (the pair
-    work then collapses to one dot product) — see dedup_embedding_cosine.
-    """
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
 
 
 def unit_vector_col(a: str) -> Column:

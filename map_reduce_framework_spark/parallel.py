@@ -29,10 +29,13 @@ itself).
 
 from __future__ import annotations
 
+import logging
 import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
+
+logger = logging.getLogger("map_reduce_framework_spark.parallel")
 
 
 def overlap_enabled() -> bool:
@@ -92,8 +95,9 @@ def co_materialize(df: DataFrame, desc: str | None = None):
     The body runs the *other* (typically iterative, many-small-jobs)
     branch on the main thread; on exit the background action is joined
     and its exception, if any, re-raised.  If the body itself raises,
-    the background action is still joined (its error suppressed) so no
-    job outlives the query's construction.
+    the background action is still joined so no job outlives the
+    query's construction; the body's exception wins, and the background
+    one is logged with its cause instead of being raised.
 
     With :func:`overlap_enabled` off this is a no-op (``df`` stays
     lazy; the final action computes it, the sequential shape).
@@ -107,7 +111,12 @@ def co_materialize(df: DataFrame, desc: str | None = None):
     except BaseException:
         try:
             h.wait()
-        except Exception:  # noqa: BLE001 — body's exception wins
-            pass
+        except BaseException:  # noqa: BLE001 — body's exception wins
+            logger.warning(
+                "co_materialize: background action %r failed while the body "
+                "was failing; raising the body's error",
+                desc,
+                exc_info=True,
+            )
         raise
     h.wait()

@@ -78,19 +78,23 @@ def write_bucketed(
     # parallelism and accepts more files per bucket, the trade
     # production makes by raising n_buckets instead.  Leaf bytes
     # OVERESTIMATE derived inputs (joins/filters keep every leaf), so
-    # big-input misclassification only errs toward parallelism.
+    # big-input misclassification only errs toward parallelism.  A plan
+    # with no file leaves (createDataFrame, localCheckpoint) or with any
+    # leaf the local filesystem cannot stat has an UNKNOWN size, which
+    # is treated as large: the alignment is skipped.
+    files = df.inputFiles()
     try:
-        leaf_bytes = sum(
-            os.stat(unquote(urlparse(f).path)).st_size
-            for f in df.inputFiles()
-            if f.startswith("file:")
+        leaf_bytes = (
+            sum(os.stat(unquote(urlparse(f).path)).st_size for f in files)
+            if files and all(f.startswith("file:") for f in files)
+            else None
         )
     except OSError:
-        leaf_bytes = 0
+        leaf_bytes = None
     align_max = int(
         os.environ.get("SPARK_GRAFT_BUCKET_ALIGN_MAX", str(256 << 20))
     )
-    if leaf_bytes <= align_max:
+    if leaf_bytes is not None and leaf_bytes <= align_max:
         df = df.repartition(n_buckets, F.col(bucket_col))
     (
         df.write.mode("overwrite")

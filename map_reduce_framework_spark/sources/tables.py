@@ -10,7 +10,10 @@ source (Search parity) lives in :mod:`..operators.search_client`.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -38,7 +41,6 @@ def _footer_timestamp_kinds(path: str) -> tuple[bool, bool]:
     detected nanos/naive shard is enough to set the right session conf
     for the whole scan."""
     import glob
-    import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -65,8 +67,41 @@ def _footer_timestamp_kinds(path: str) -> tuple[bool, bool]:
     return naive, nanos
 
 
+#: Session confs that change how Parquet footers map to Spark types (or,
+#: for ``caseSensitive``/``mergeSchema``, which columns the inferred
+#: schema holds); part of every :data:`_SCHEMA_CACHE` key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+#: (content fingerprint, schema confs) → the StructType Spark inferred;
+#: see :func:`load_table`
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table from ``{sf_dir}/{name}.parquet``.
+
+    Schema memo: inferring a Parquet schema is a Spark job (a footer read
+    scheduled on the executors), and at benchmark sizes the job, not the
+    scan, is the unit of cost.  The StructType Spark itself inferred is
+    therefore kept in :data:`_SCHEMA_CACHE`, and a warm load reads with
+    ``spark.read.schema(cached)``, which runs no job.  The key is the
+    table's content fingerprint (path plus every file's name, size and
+    ``mtime_ns``; the one :func:`table_row_count` uses) together with the
+    values of :data:`_SCHEMA_CONFS`, read after the timestamp confs below
+    are set.  A stale schema cannot be served: a table rewritten at the
+    same path changes the fingerprint, and a session whose confs would
+    infer different types changes the conf half of the key; either is a
+    miss that infers afresh.  A path the local filesystem cannot stat (a
+    remote URI) has no fingerprint and is inferred on every load.  Only
+    the inferred schema is cached, never a DataFrame, and no Parquet type
+    is converted in Python.
 
     Works on ANY session, not just the one built by :func:`..session.get_spark`,
     and across the timestamp encodings the generator has shipped:
@@ -99,14 +134,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the conf post-read would race the lazy scan's execution-time schema
     conversion).
     """
+    from .bucketing import fingerprinted_table_name
+
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    naive_ts, nanos_ts = _footer_timestamp_kinds(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    naive_ts, nanos_ts = _footer_timestamp_kinds(path)
     if nanos_ts:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if naive_ts:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    # a path the local filesystem cannot see has no fingerprint to key on
+    key = None
+    if os.path.exists(path):
+        key = (
+            fingerprinted_table_name("schema", sf_dir, name),
+            tuple(spark.conf.get(c) for c in _SCHEMA_CONFS),
+        )
+    cached = _SCHEMA_CACHE.get(key)
+    if cached is not None:
+        df = spark.read.schema(cached).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            # a copy: ``df.schema`` is cached on df and StructType is mutable
+            _SCHEMA_CACHE[key] = StructType.fromJson(df.schema.jsonValue())
 
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType

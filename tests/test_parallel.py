@@ -50,12 +50,25 @@ def test_co_materialize_reraises_background_error(spark):
             pass  # body succeeds; the background failure must surface
 
 
-def test_co_materialize_body_error_wins(spark):
-    bad_body = RuntimeError("body failure")
-    df = spark.range(10)
-    with pytest.raises(RuntimeError, match="body failure"):
-        with co_materialize(df, "test: ok branch"):
-            raise bad_body
+def test_co_materialize_body_error_wins(spark, caplog):
+    """The body's error is raised whether the background action
+    succeeds or fails; a failed background action is logged, with its
+    exception attached."""
+    import logging
+
+    from pyspark.sql import functions as F
+
+    caplog.set_level(logging.WARNING, logger="map_reduce_framework_spark.parallel")
+    ok = spark.range(10)
+    bad = spark.range(10).select(F.assert_true(F.col("id") < 5).alias("x"))
+    for df, desc in ((ok, "test: ok branch"), (bad, "test: failing branch")):
+        with pytest.raises(RuntimeError, match="body failure"):
+            with co_materialize(df, desc):
+                raise RuntimeError("body failure")
+    (record,) = [r for r in caplog.records if r.name.endswith(".parallel")]
+    assert "test: failing branch" in record.getMessage()
+    assert record.exc_info is not None
+    assert "id < 5" in str(record.exc_info[1])
 
 
 def test_co_materialize_noop_when_disabled(spark, monkeypatch):

@@ -716,13 +716,24 @@ def test_ewma_segmented_single_data_shuffle(spark):
     assert plan.count("Exchange") <= 2
 
 
+def _bucket_files(spark, table):
+    """Number of parquet part files in a catalog table's location."""
+    import os
+
+    loc = spark.sql(f"DESCRIBE FORMATTED {table}").where(
+        "col_name = 'Location'"
+    ).collect()[0]["data_type"]
+    path = loc.replace("file:", "")
+    return sum(
+        1 for f in os.listdir(path) if f.startswith("part-") and f.endswith(".parquet")
+    )
+
+
 def test_bucketed_write_alignment_gate(spark, tmp_path, monkeypatch):
     """Round-15: write_bucketed aligns partitions to the bucket spec
     (one file per bucket) only for SMALL inputs; past the size gate the
     repartition is skipped so large tables keep full writer
     parallelism.  Both paths must read back identically."""
-    import os
-
     from pyspark.sql import functions as F
 
     from map_reduce_framework_spark.sources.bucketing import write_bucketed
@@ -733,29 +744,38 @@ def test_bucketed_write_alignment_gate(spark, tmp_path, monkeypatch):
     ).repartition(16).write.parquet(src)
     df = spark.read.parquet(src)
 
-    def n_files(table):
-        loc = spark.sql(f"DESCRIBE FORMATTED {table}").where(
-            "col_name = 'Location'"
-        ).collect()[0]["data_type"]
-        path = loc.replace("file:", "")
-        return sum(
-            1
-            for f in os.listdir(path)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-
     # small input (default 256MB gate): exactly one file per bucket
     write_bucketed(df, "t_align_small", "k", n_buckets=4)
-    assert n_files("t_align_small") == 4
+    assert _bucket_files(spark, "t_align_small") == 4
 
     # force the large-input path: alignment skipped, writer keeps its
-    # parallelism (16 input partitions x up to 4 buckets > 4 files)
+    # parallelism (16 input partitions x up to 4 buckets > 4 files); the
+    # explicit repartition keeps 16 writer tasks on any core count,
+    # where the scan alone may pack the small files into fewer splits
     monkeypatch.setenv("SPARK_GRAFT_BUCKET_ALIGN_MAX", "0")
-    write_bucketed(df, "t_align_large", "k", n_buckets=4)
-    assert n_files("t_align_large") > 4
+    write_bucketed(df.repartition(16), "t_align_large", "k", n_buckets=4)
+    assert _bucket_files(spark, "t_align_large") > 4
 
     a = spark.table("t_align_small").orderBy("k").collect()
     b = spark.table("t_align_large").orderBy("k").collect()
     assert a == b
     spark.sql("DROP TABLE t_align_small")
     spark.sql("DROP TABLE t_align_large")
+
+
+def test_bucketed_write_unknown_size_keeps_parallelism(spark):
+    """A plan with no file leaves has an unknown input size: the
+    alignment repartition is skipped (more than one file per bucket),
+    even under the default size gate."""
+    from pyspark.sql import functions as F
+
+    from map_reduce_framework_spark.sources.bucketing import write_bucketed
+
+    df = spark.range(0, 1000, 1, 16).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
+    )
+    assert df.inputFiles() == []
+    write_bucketed(df, "t_align_unknown", "k", n_buckets=4)
+    assert _bucket_files(spark, "t_align_unknown") > 4
+    assert spark.table("t_align_unknown").count() == 1000
+    spark.sql("DROP TABLE t_align_unknown")
