@@ -16,14 +16,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def fingerprinted_table_name(prefix: str, sf_dir: str, source_table: str) -> str:
-    """Per-corpus materialized-index table name: folds a content
-    fingerprint (per-file size + mtime of the source table) into the
-    name alongside the path, so a session touching several sf_dirs never
-    reuses another corpus's index and a corpus REGENERATED at the same
-    path is never served a stale one."""
+def content_stamp(sf_dir: str, source_table: str) -> str:
+    """Content stamp of ``{sf_dir}/{source_table}.parquet``: every file's
+    name, size and ``mtime_ns``, joined.  Empty when the path does not
+    exist locally."""
     import glob
-    import hashlib
     import os
 
     path = os.path.join(sf_dir, f"{source_table}.parquet")
@@ -34,11 +31,21 @@ def fingerprinted_table_name(prefix: str, sf_dir: str, source_table: str) -> str
         if os.path.exists(path)
         else []
     )
-    stamp = "|".join(
+    return "|".join(
         f"{os.path.basename(f)}:{os.stat(f).st_size}:{os.stat(f).st_mtime_ns}"
         for f in files
     )
-    key = f"{sf_dir}#{stamp}"
+
+
+def fingerprinted_table_name(prefix: str, sf_dir: str, source_table: str) -> str:
+    """Per-corpus materialized-index table name: folds a content
+    fingerprint (:func:`content_stamp`) into the name alongside the
+    path, so a session touching several sf_dirs never reuses another
+    corpus's index and a corpus REGENERATED at the same path is never
+    served a stale one."""
+    import hashlib
+
+    key = f"{sf_dir}#{content_stamp(sf_dir, source_table)}"
     return f"{prefix}_{hashlib.md5(key.encode()).hexdigest()[:8]}"
 
 
@@ -79,14 +86,19 @@ def write_bucketed(
     # production makes by raising n_buckets instead.  Leaf bytes
     # OVERESTIMATE derived inputs (joins/filters keep every leaf), so
     # big-input misclassification only errs toward parallelism.  A plan
-    # with no file leaves (createDataFrame, localCheckpoint) or with any
-    # leaf the local filesystem cannot stat has an UNKNOWN size, which
-    # is treated as large: the alignment is skipped.
+    # with no file leaves counts as small and is aligned: persisted
+    # subtrees are InMemoryRelation leaves with no input files, and the
+    # index writers pass exactly such frames (small per-run deltas,
+    # fanned out to defaultParallelism), which unaligned would land as
+    # tasks x n_buckets files again.  The gate therefore assumes a
+    # leafless plan is driver- or cache-sized.  A leaf on non-local
+    # storage, or a local one that cannot be stat'ed, has an UNKNOWN
+    # size, treated as large: the alignment is skipped.
     files = df.inputFiles()
     try:
         leaf_bytes = (
             sum(os.stat(unquote(urlparse(f).path)).st_size for f in files)
-            if files and all(f.startswith("file:") for f in files)
+            if all(f.startswith("file:") for f in files)
             else None
         )
     except OSError:

@@ -79,7 +79,7 @@ _SCHEMA_CONFS = (
     "spark.sql.caseSensitive",
 )
 
-#: (content fingerprint, schema confs) → the StructType Spark inferred;
+#: (path, content stamp, schema confs) → the StructType Spark inferred;
 #: see :func:`load_table`
 _SCHEMA_CACHE: dict[tuple, StructType] = {}
 
@@ -92,16 +92,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     scan, is the unit of cost.  The StructType Spark itself inferred is
     therefore kept in :data:`_SCHEMA_CACHE`, and a warm load reads with
     ``spark.read.schema(cached)``, which runs no job.  The key is the
-    table's content fingerprint (path plus every file's name, size and
-    ``mtime_ns``; the one :func:`table_row_count` uses) together with the
-    values of :data:`_SCHEMA_CONFS`, read after the timestamp confs below
-    are set.  A stale schema cannot be served: a table rewritten at the
-    same path changes the fingerprint, and a session whose confs would
-    infer different types changes the conf half of the key; either is a
-    miss that infers afresh.  A path the local filesystem cannot stat (a
-    remote URI) has no fingerprint and is inferred on every load.  Only
-    the inferred schema is cached, never a DataFrame, and no Parquet type
-    is converted in Python.
+    table's path and its unhashed content stamp
+    (:func:`..bucketing.content_stamp`: every file's name, size and
+    ``mtime_ns``; :func:`table_row_count` keys on the same) together with
+    the values of :data:`_SCHEMA_CONFS`, read after the timestamp confs
+    below are set.  A stale schema is not served: a table rewritten at
+    the same path changes the stamp (a file's name, size or
+    ``mtime_ns``; the stamp is compared whole, not hashed), and a session
+    whose confs would infer different types changes the conf half of the
+    key; either is a miss that infers afresh.  A path the local
+    filesystem cannot stat (a remote URI) has no stamp and is inferred
+    on every load.  Only the inferred schema is cached, never a
+    DataFrame, and no Parquet type is converted in Python.
 
     Works on ANY session, not just the one built by :func:`..session.get_spark`,
     and across the timestamp encodings the generator has shipped:
@@ -134,7 +136,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the conf post-read would race the lazy scan's execution-time schema
     conversion).
     """
-    from .bucketing import fingerprinted_table_name
+    from .bucketing import content_stamp
 
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -144,11 +146,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if naive_ts:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # a path the local filesystem cannot see has no fingerprint to key on
+    # a path the local filesystem cannot see has no stamp to key on
     key = None
     if os.path.exists(path):
         key = (
-            fingerprinted_table_name("schema", sf_dir, name),
+            path,
+            content_stamp(sf_dir, name),
             tuple(spark.conf.get(c) for c in _SCHEMA_CONFS),
         )
     cached = _SCHEMA_CACHE.get(key)
@@ -171,8 +174,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-#: (content fingerprint) → row count; see :func:`table_row_count`
-_ROW_COUNT_CACHE: dict[str, int] = {}
+#: (sf_dir, table, content stamp) → row count; see :func:`table_row_count`
+_ROW_COUNT_CACHE: dict[tuple, int] = {}
 
 
 def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -180,12 +183,12 @@ def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     parameter to the corpus (``adaptive_sign_bits``, ``semantic_k``)
     without paying one extra Spark job per invocation when composed
     into larger pipelines (round-7 ADVICE).  Keyed by the same
-    per-file size+mtime content fingerprint the materialized-index
-    tables use, so a regenerated corpus at the same path is re-counted,
-    never served a stale cardinality."""
-    from .bucketing import fingerprinted_table_name
+    per-file size+mtime content stamp the materialized-index table names
+    fold in (unhashed here), so a regenerated corpus at the same path is
+    re-counted, never served a stale cardinality."""
+    from .bucketing import content_stamp
 
-    key = fingerprinted_table_name("rowcount", sf_dir, name)
+    key = (sf_dir, name, content_stamp(sf_dir, name))
     if key not in _ROW_COUNT_CACHE:
         _ROW_COUNT_CACHE[key] = load_table(spark, sf_dir, name).count()
     return _ROW_COUNT_CACHE[key]

@@ -763,10 +763,37 @@ def test_bucketed_write_alignment_gate(spark, tmp_path, monkeypatch):
     spark.sql("DROP TABLE t_align_large")
 
 
-def test_bucketed_write_unknown_size_keeps_parallelism(spark):
-    """A plan with no file leaves has an unknown input size: the
-    alignment repartition is skipped (more than one file per bucket),
-    even under the default size gate."""
+def test_bucketed_write_persisted_fan_out_is_aligned(spark, tmp_path):
+    """The index writers pass persisted, fanned-out frames, whose plans
+    have no file leaves (a persisted subtree is an InMemoryRelation):
+    they must still get the alignment repartition, one file per bucket,
+    not one per (task, bucket)."""
+    from pyspark.sql import functions as F
+
+    from map_reduce_framework_spark.operators.dedup import fan_out
+    from map_reduce_framework_spark.sources.bucketing import write_bucketed
+
+    src = str(tmp_path / "src")
+    spark.range(0, 1000).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
+    ).coalesce(1).write.parquet(src)
+    df = fan_out(spark.read.parquet(src)).persist()
+    try:
+        df.count()
+        assert df.inputFiles() == []
+        assert df.rdd.getNumPartitions() > 4
+        write_bucketed(df, "t_align_persisted", "k", n_buckets=4)
+        assert _bucket_files(spark, "t_align_persisted") <= 4
+        assert spark.table("t_align_persisted").count() == 1000
+    finally:
+        df.unpersist()
+        spark.sql("DROP TABLE IF EXISTS t_align_persisted")
+
+
+def test_bucketed_write_remote_input_keeps_parallelism(spark, monkeypatch):
+    """An input on non-local storage has an unknown size: the alignment
+    repartition is skipped (more than one file per bucket), even under
+    the default size gate."""
     from pyspark.sql import functions as F
 
     from map_reduce_framework_spark.sources.bucketing import write_bucketed
@@ -774,8 +801,10 @@ def test_bucketed_write_unknown_size_keeps_parallelism(spark):
     df = spark.range(0, 1000, 1, 16).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")
     )
-    assert df.inputFiles() == []
-    write_bucketed(df, "t_align_unknown", "k", n_buckets=4)
-    assert _bucket_files(spark, "t_align_unknown") > 4
-    assert spark.table("t_align_unknown").count() == 1000
-    spark.sql("DROP TABLE t_align_unknown")
+    monkeypatch.setattr(
+        df, "inputFiles", lambda: ["hdfs://nn/warehouse/t/part-0.parquet"]
+    )
+    write_bucketed(df, "t_align_remote", "k", n_buckets=4)
+    assert _bucket_files(spark, "t_align_remote") > 4
+    assert spark.table("t_align_remote").count() == 1000
+    spark.sql("DROP TABLE t_align_remote")
