@@ -30,13 +30,12 @@ these are mandated extensions.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import rnd, rnd_sql
 from ..sources import load_table
+from ..sources.tables import scan_partitions
 
 # ---------------------------------------------------------------------------
 # Cross-engine deterministic hashing + shingling
@@ -189,98 +188,6 @@ def hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _size_conf_bytes(raw: str) -> int:
-    """Parse a Spark size conf value ('134217728b', '128m', '4g')."""
-    s = raw.strip().lower()
-    for suffix, mult in (
-        ("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20), ("kb", 1 << 10),
-        ("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20), ("k", 1 << 10),
-        ("b", 1),
-    ):
-        if s.endswith(suffix):
-            return int(s[: -len(suffix)]) * mult
-    return int(s)
-
-
-def _scan_partitions(df: DataFrame) -> int:
-    """Scan partition count of a file-source DataFrame WITHOUT compiling
-    the plan to an RDD.
-
-    ``df.rdd.getNumPartitions()`` answers the same question but pays a
-    full plan→RDD conversion on the driver (~35 ms per fresh DataFrame
-    measured on local[32]) — and :func:`fan_out` runs at construction
-    time of nearly every query, so that cost lands inside every timed
-    bench row (guide §1.2: per-task work includes the driver's own).
-    For plain file scans the count is a pure function of the leaf file
-    sizes and three confs, so replicate Spark's split packing
-    (``FilePartition.maxSplitBytes`` + ``getFilePartitions``) from
-    ``inputFiles()`` + ``stat`` (~10 ms).  Round-15 (round-14 advice):
-    the first cut approximated the pack as ``ceil(total/maxSplit)`` — a
-    LOWER bound of Spark's greedy packing that could under-count on
-    many-small-file layouts — and used ceil where Spark floor-divides
-    ``bytesPerCore``.  This is now the exact algorithm: per-file split
-    into ≤ maxSplit chunks, chunks sorted descending, greedy bin-pack
-    charging ``openCostInBytes`` per chunk, floor division for
-    bytesPerCore, and the ``minPartitionNum`` conf consulted before
-    ``defaultParallelism`` — pinned equal to the ``.rdd`` truth across
-    the shipped layouts and a many-small-files fixture by
-    ``tests/test_dedup.py::test_scan_partitions_matches_rdd_truth``.
-    Parquet is splittable (the only source format here); any non-local
-    path, empty listing, or conf surprise falls back to the exact RDD
-    answer.
-    """
-    try:
-        from urllib.parse import unquote, urlparse
-
-        files = df.inputFiles()
-        if not files:
-            raise ValueError("no input files")
-        sizes = []
-        for f in files:
-            if not f.startswith("file:"):
-                raise ValueError(f"non-local input {f!r}")
-            sizes.append(os.stat(unquote(urlparse(f).path)).st_size)
-        spark = df.sparkSession
-        conf = spark.conf
-        max_pb = _size_conf_bytes(conf.get("spark.sql.files.maxPartitionBytes"))
-        open_cost = _size_conf_bytes(conf.get("spark.sql.files.openCostInBytes"))
-        if conf.get("spark.sql.files.maxPartitionNum", None):
-            # the repack path isn't replicated — use the exact answer
-            raise ValueError("maxPartitionNum set")
-        min_pn = conf.get("spark.sql.files.minPartitionNum", None)
-        if not min_pn:
-            min_pn = conf.get(
-                "spark.sql.leafNodeDefaultParallelism",
-                str(spark.sparkContext.defaultParallelism),
-            )
-        par = max(1, int(min_pn))
-        total = sum(s + open_cost for s in sizes)
-        bytes_per_core = total // par  # Spark floor-divides here
-        max_split = min(max_pb, max(open_cost, bytes_per_core))
-        # per-file chunking (parquet is splittable), then Spark's greedy
-        # pack over size-descending chunks: close the open partition
-        # when the next chunk would overflow maxSplit; each packed
-        # chunk is charged its payload + openCost
-        chunks: list[int] = []
-        for s in sizes:
-            off = 0
-            while off < s:
-                chunks.append(min(max_split, s - off))
-                off += max_split
-        chunks.sort(reverse=True)
-        n, cur = 0, 0
-        for c in chunks:
-            if cur + c > max_split and cur > 0:
-                n += 1
-                cur = 0
-            cur += c + open_cost
-        if cur > 0:
-            n += 1
-        return max(1, n)
-    except Exception:
-        return df.rdd.getNumPartitions()
-
-
 def fan_out(df: DataFrame) -> DataFrame:
     """Repartition to cluster parallelism iff the scan is under-parallel.
 
@@ -289,10 +196,11 @@ def fan_out(df: DataFrame) -> DataFrame:
     md5) onto one core.  On a real cluster reading ~100 TB the scan has
     thousands of input splits and this is a no-op (the partition count
     already exceeds the default parallelism), so the round-robin shuffle
-    is only ever paid when it unlocks idle cores.
+    is only ever paid when it unlocks idle cores.  ``df`` must be a
+    narrow plan over a file scan (see :func:`scan_partitions`).
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    if _scan_partitions(df) < target:
+    if scan_partitions(df) < target:
         return df.repartition(target)
     return df
 
@@ -314,7 +222,7 @@ def fan_out_sized(
         df.sparkSession.sparkContext.defaultParallelism,
         max(1, -(-n_rows // rows_per_task)),
     )
-    if _scan_partitions(df) < target:
+    if scan_partitions(df) < target:
         return df.repartition(target)
     return df
 

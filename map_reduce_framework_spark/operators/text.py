@@ -1521,7 +1521,8 @@ def _bpe_train(
 
     global _LAST_TRAIN_ROUNDS
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    scan = load_table(spark, sf_dir, "documents")
+    docs = fan_out(scan)
     vocab = (
         docs.select(F.explode(F.split(F.col("text"), " ")).alias("term"))
         .where(F.col("term") != "")
@@ -1543,13 +1544,14 @@ def _bpe_train(
     # Round-14 (guide §2.2 fewer/larger partitions): every training
     # round launches a TakeOrdered job over the cached vocab, so its
     # partition count is paid BPE_ROUNDS times.  Coalesce to the
-    # corpus SCAN's own parallelism (input-size-derived, the
-    # fan_out estimate): on the tiny test corpora that is 1-2 tasks per
-    # round instead of 32; at scale the scan estimate exceeds the
-    # shuffle partition count and coalesce is a no-op.
-    from .dedup import _scan_partitions
+    # corpus SCAN's own parallelism (input-size-derived; the raw scan,
+    # not the fanned-out docs, whose .rdd would run the shuffle): on
+    # the tiny test corpora that is 1-2 tasks per round instead of 32;
+    # at scale the scan count exceeds the shuffle partition count and
+    # coalesce is a no-op.
+    from ..sources.tables import scan_partitions
 
-    vocab = vocab.coalesce(max(1, _scan_partitions(docs)))
+    vocab = vocab.coalesce(max(1, scan_partitions(scan)))
     cur = cache.persist_tracked(vocab)
     prev: DataFrame | None = None
     merges: list[tuple[int, str, str, str, int]] = []

@@ -50,8 +50,9 @@ _MODULES = [
 # entries in insertion order.  Round-15 curation (an OPTIMIZATION round:
 # no new queries, every change output-identical — overlap scheduling,
 # the mapInArrow kernel conversion pinned bit-for-bit by
-# test_stopword_gopher_kernels_match_python, the exact _scan_partitions
-# replica — so per the round-12 output-identical precedent nothing is
+# test_stopword_gopher_kernels_match_python, the scan partition count
+# fan_out reads (Spark's own, memoized by sources.tables.scan_partitions)
+# — so per the round-12 output-identical precedent nothing is
 # FORCED into the window; the window pays rotation debt instead):
 # (a) FIRST, the FORTY-EIGHT r11-latest rows round 14 deferred (the
 # contract pinned in round 14's registry comment and

@@ -12,16 +12,28 @@ two tables bucketed on the same key joined with zero Exchange operators.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+#: Largest source (leaf bytes) :func:`write_bucketed` repartitions to the
+#: bucket spec; a larger one keeps full writer parallelism.
+BUCKET_ALIGN_MAX = 256 << 20
+
+
+def files_stamp(files) -> str:
+    """Every local file's name, size and ``mtime_ns``, joined."""
+    stats = ((os.path.basename(f), os.stat(f)) for f in files)
+    return "|".join(f"{n}:{st.st_size}:{st.st_mtime_ns}" for n, st in stats)
+
+
 def content_stamp(sf_dir: str, source_table: str) -> str:
-    """Content stamp of ``{sf_dir}/{source_table}.parquet``: every file's
-    name, size and ``mtime_ns``, joined.  Empty when the path does not
+    """Content stamp of ``{sf_dir}/{source_table}.parquet``
+    (:func:`files_stamp` of its files).  Empty when the path does not
     exist locally."""
     import glob
-    import os
 
     path = os.path.join(sf_dir, f"{source_table}.parquet")
     files = (
@@ -31,10 +43,7 @@ def content_stamp(sf_dir: str, source_table: str) -> str:
         if os.path.exists(path)
         else []
     )
-    return "|".join(
-        f"{os.path.basename(f)}:{os.stat(f).st_size}:{os.stat(f).st_mtime_ns}"
-        for f in files
-    )
+    return files_stamp(files)
 
 
 def fingerprinted_table_name(prefix: str, sf_dir: str, source_table: str) -> str:
@@ -61,7 +70,6 @@ def write_bucketed(
     warehouse directory persists — clear any orphaned location first so
     ``saveAsTable`` never hits LOCATION_ALREADY_EXISTS.
     """
-    import os
     import shutil
     from urllib.parse import unquote, urlparse
 
@@ -103,10 +111,7 @@ def write_bucketed(
         )
     except OSError:
         leaf_bytes = None
-    align_max = int(
-        os.environ.get("SPARK_GRAFT_BUCKET_ALIGN_MAX", str(256 << 20))
-    )
-    if leaf_bytes is not None and leaf_bytes <= align_max:
+    if leaf_bytes is not None and leaf_bytes <= BUCKET_ALIGN_MAX:
         df = df.repartition(n_buckets, F.col(bucket_col))
     (
         df.write.mode("overwrite")

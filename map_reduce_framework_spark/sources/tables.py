@@ -83,6 +83,61 @@ _SCHEMA_CONFS = (
 #: see :func:`load_table`
 _SCHEMA_CACHE: dict[tuple, StructType] = {}
 
+#: Confs Spark's file-split packing reads; part of every
+#: :data:`_PARTITIONS_CACHE` key.
+_SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum",
+    "spark.sql.leafNodeDefaultParallelism",
+)
+
+#: (input files' stamp, split confs, defaultParallelism) → the partition
+#: count Spark planned; see :func:`scan_partitions`
+_PARTITIONS_CACHE: dict[tuple, int] = {}
+
+
+def scan_partitions(df: DataFrame) -> int:
+    """Spark's own ``df.rdd.getNumPartitions()``, memoized.
+
+    ``df`` must be a narrow plan over a file scan (projections and
+    filters over :func:`load_table`): compiling such a plan to an RDD
+    runs no Spark job, but it costs ~35 ms of driver time per fresh
+    DataFrame, and :func:`..operators.dedup.fan_out` asks at the build of
+    nearly every query.  A plan with an exchange is not such an input:
+    its ``.rdd`` runs the shuffle.
+
+    For a narrow scan the count depends only on the input files, the
+    split confs in :data:`_SPLIT_CONFS` and ``defaultParallelism``, so
+    the answer is kept in :data:`_PARTITIONS_CACHE` under those, the
+    files by :func:`..bucketing.files_stamp` (name, size, ``mtime_ns``).
+    An input with a non-local or unstattable file, or none at all, has
+    no stamp and asks Spark every time.
+    """
+    from urllib.parse import unquote, urlparse
+
+    from .bucketing import files_stamp
+
+    spark = df.sparkSession
+    files = df.inputFiles()
+    key = None
+    if files and all(f.startswith("file:") for f in files):
+        try:
+            key = (
+                files_stamp(unquote(urlparse(f).path) for f in files),
+                tuple(spark.conf.get(c, None) for c in _SPLIT_CONFS),
+                spark.sparkContext.defaultParallelism,
+            )
+        except OSError:
+            pass
+    n = _PARTITIONS_CACHE.get(key)
+    if n is None:
+        n = df.rdd.getNumPartitions()
+        if key is not None:
+            _PARTITIONS_CACHE[key] = n
+    return n
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table from ``{sf_dir}/{name}.parquet``.

@@ -1,11 +1,12 @@
-"""Dump ``explain("formatted")`` for named queries to plans/r15/.
+"""Dump ``explain("formatted")`` for named queries.
 
-Usage: python scripts/dump_plans_r15.py <suffix> <query> [query ...]
+Usage: python scripts/dump_plans.py <tag> <suffix> <query> [query ...]
 
-Writes plans/r15/<query>_<suffix>.txt (suffix = before|after).  The
-judge cannot run Spark; these files are the evidence for every plan
-claim in OPTIMIZATION_r15.md (Exchange counts, join strategies,
-PushedFilters, Python-eval nodes).
+Writes /tmp/mrfs_plans/<tag>/<query>_<suffix>.txt (e.g. suffix =
+before|after), for reading Exchange counts, join strategies,
+PushedFilters and Python-eval nodes side by side.  The plan facts that
+must hold are assertions in tests/test_plans.py and
+tests/test_plan_lint.py; these dumps are not committed.
 """
 
 from __future__ import annotations
@@ -16,21 +17,18 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15"
-)
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
-    os.makedirs(OUT, exist_ok=True)
+    tag, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    out = os.path.join("/tmp/mrfs_plans", tag)
+    os.makedirs(out, exist_ok=True)
 
     from map_reduce_framework_spark import cache
     from map_reduce_framework_spark.plans.registry import QUERIES
     from map_reduce_framework_spark.session import get_spark
 
-    spark = get_spark("dump-plans-r15")
+    spark = get_spark(f"dump-plans-{tag}")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         df = QUERIES[name](spark, SF)
@@ -39,7 +37,7 @@ def main() -> None:
                 "formatted"
             )
         )
-        path = os.path.join(OUT, f"{name}_{suffix}.txt")
+        path = os.path.join(out, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
         cache.release()

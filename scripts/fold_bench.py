@@ -1,11 +1,10 @@
-"""Fold multiple full bench captures into the canonical round-15 record.
+"""Fold multiple full bench captures into one canonical record.
 
 Per-query MIN across captures (the round-13 canonical method: each
 capture shows distinct transient neighbor-burst blocks on untouched
-code, and the per-query min removes them).  Writes
-scripts/bench_r15_solo.json.
+code, and the per-query min removes them).
 
-Usage: python scripts/fold_bench_r14.py out.json capture1.json [capture2.json ...]
+Usage: python scripts/fold_bench.py out.json capture1.json [capture2.json ...]
 """
 
 from __future__ import annotations
@@ -47,10 +46,9 @@ def main() -> None:
         "control_drift": min(c["control_drift"] for c in captures),
         "queries": queries,
         "note": (
-            "canonical round-15 record: per-query min across same-code "
+            "canonical record: per-query min across same-code "
             "quiet-start captures (each with bench.py's own best-of-2 + "
-            "drift-redo min-folding inside), the round-13 method; the "
-            "host showed externally-imposed neighbor load all round"
+            "drift-redo min-folding inside), the round-13 method"
         ),
     }
     with open(out_path, "w") as f:

@@ -436,3 +436,38 @@ def test_stopword_gopher_kernels_match_python(spark):
             "n_symbol": sum(1 for t in ts if symbol_re.match(t)),
         }
         assert gg[doc_id] == exp, f"gopher kernel mismatch doc {doc_id}"
+
+
+def test_stopword_gopher_kernels_null_text(spark):
+    """A NULL ``text`` row: ``pc.split_pattern`` propagates the null, so
+    the token count is NULL and every per-token count is 0 (the old
+    per-row Python kernel raised on ``None.split``).  Neighbouring rows
+    of the same batch are unaffected."""
+    from map_reduce_framework_spark.operators.text import (
+        LANG_STOPWORDS,
+        _gopher_counts,
+        _stopword_counts,
+    )
+
+    docs = spark.createDataFrame(
+        [(0, "en", "the cat"), (1, "en", None), (2, "de", "der die")],
+        "doc_id long, lang string, text string",
+    )
+    got = {r["doc_id"]: r.asDict() for r in _stopword_counts(docs).collect()}
+    exp = {"doc_id": 1, "lang": "en", "n_tokens": None, "n_uniq_tokens": 0}
+    exp.update({f"s_{lg}": 0 for lg in LANG_STOPWORDS})
+    assert got[1] == exp
+    assert got[0]["n_tokens"] == 2 and got[0]["s_en"] == 1
+    assert got[2]["n_tokens"] == 2 and got[2]["s_de"] == 2
+
+    gg = {r["doc_id"]: r.asDict() for r in _gopher_counts(docs).collect()}
+    assert gg[1] == {
+        "doc_id": 1,
+        "n_words": None,
+        "sum_len": 0,
+        "n_alpha": 0,
+        "n_stop": 0,
+        "n_symbol": 0,
+    }
+    assert gg[0]["n_words"] == 2 and gg[0]["n_stop"] == 1
+    assert gg[2]["n_words"] == 2 and gg[2]["n_stop"] == 0

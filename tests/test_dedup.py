@@ -1356,18 +1356,18 @@ def test_dedup_url_matches_oracle(spark, duck):
 
 
 def test_scan_partitions_matches_rdd_truth(spark, tmp_path):
-    """_scan_partitions must equal the exact plan->RDD partition count
-    (round-14 advice pinned: the estimate replicates Spark's greedy
-    split packing, not a ceil(total/maxSplit) lower bound) across the
-    shipped single-file layouts, a many-small-files layout, and a
-    forced multi-chunk split of one larger file."""
-    from map_reduce_framework_spark.operators.dedup import _scan_partitions
+    """scan_partitions must equal the exact plan->RDD partition count
+    across the shipped single-file layouts, a many-small-files layout, a
+    forced multi-chunk split of one larger file, and a table rewritten
+    at the same path with another file count: a memoized count is never
+    served for other files or other split confs."""
     from map_reduce_framework_spark.sources import load_table
+    from map_reduce_framework_spark.sources.tables import scan_partitions
 
     from .conftest import SF_DIR
 
     def check(df, label):
-        est = _scan_partitions(df)
+        est = scan_partitions(df)
         truth = df.rdd.getNumPartitions()
         assert est == truth, f"{label}: estimate {est} != truth {truth}"
 
@@ -1380,10 +1380,20 @@ def test_scan_partitions_matches_rdd_truth(spark, tmp_path):
     many = str(tmp_path / "many_small")
     spark.range(4000).repartition(40).write.parquet(many)
     check(spark.read.parquet(many), "40 small files")
+    spark.conf.set("spark.sql.files.minPartitionNum", "3")
+    try:
+        check(spark.read.parquet(many), "40 small files, minPartitionNum=3")
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+
+    # the same path rewritten with another file count is counted again
+    spark.range(4000).repartition(3).write.mode("overwrite").parquet(many)
+    check(spark.read.parquet(many), "rewritten as 3 files")
 
     # chunked split: one file larger than a shrunken maxPartitionBytes
     one = str(tmp_path / "one_chunky")
     spark.range(200_000).coalesce(1).write.parquet(one)
+    check(spark.read.parquet(one), "default confs")
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")

@@ -14,7 +14,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from map_reduce_framework_spark.operators.dedup import fan_out
 from map_reduce_framework_spark.plans.registry import QUERIES
+from map_reduce_framework_spark.sources import tables
 from map_reduce_framework_spark.sources.tables import TABLES, load_table
 
 from .conftest import SF_DIR
@@ -47,6 +49,16 @@ def test_warm_load_table_runs_no_job(spark, name):
     warm, n = _jobs(spark, lambda: load_table(spark, SF_DIR, name))
     assert n == 0
     assert warm.schema == cold.schema
+
+
+@pytest.mark.parametrize("name", TABLES)
+def test_fan_out_runs_no_job(spark, name, monkeypatch):
+    monkeypatch.setattr(tables, "_PARTITIONS_CACHE", {})
+    load_table(spark, SF_DIR, name)  # warms the schema memo
+    for memo in ("cold", "warm"):
+        _, n = _jobs(spark, lambda: fan_out(load_table(spark, SF_DIR, name)))
+        assert n == 0, memo
+    assert tables._PARTITIONS_CACHE
 
 
 @pytest.mark.parametrize("name", LAZY_QUERIES)

@@ -736,6 +736,7 @@ def test_bucketed_write_alignment_gate(spark, tmp_path, monkeypatch):
     parallelism.  Both paths must read back identically."""
     from pyspark.sql import functions as F
 
+    from map_reduce_framework_spark.sources import bucketing
     from map_reduce_framework_spark.sources.bucketing import write_bucketed
 
     src = str(tmp_path / "src")
@@ -752,7 +753,7 @@ def test_bucketed_write_alignment_gate(spark, tmp_path, monkeypatch):
     # parallelism (16 input partitions x up to 4 buckets > 4 files); the
     # explicit repartition keeps 16 writer tasks on any core count,
     # where the scan alone may pack the small files into fewer splits
-    monkeypatch.setenv("SPARK_GRAFT_BUCKET_ALIGN_MAX", "0")
+    monkeypatch.setattr(bucketing, "BUCKET_ALIGN_MAX", 0)
     write_bucketed(df.repartition(16), "t_align_large", "k", n_buckets=4)
     assert _bucket_files(spark, "t_align_large") > 4
 
