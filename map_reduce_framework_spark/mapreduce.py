@@ -24,7 +24,10 @@ Two paths:
   rows are schema-less Python objects — the one legitimate RDD use in this
   engine.  Grouping = global sort by key (range partitioner, comparisons
   only) + adjacent-run merge per partition: a distributed sort-merge
-  groupByKey that never calls ``hash()``.
+  groupByKey that never calls ``hash()``.  Two Spark jobs at n > 1 (one
+  to sample the range bounds, one to shuffle, reduce and collect; the
+  final k3 sort runs on the driver over the collected list), one at
+  n = 1.
 - :func:`run_map_reduce_df` — **DataFrame path** (the scale path): input
   is a DataFrame, map = Arrow-batched ``mapInPandas`` UDTF (the Emit2
   analogue: yielded rows), group = ``groupBy`` on key columns, reduce =
@@ -46,11 +49,14 @@ Deviation notes vs the reference, recorded for the judge:
 
 from __future__ import annotations
 
+import bisect
 import functools
 import logging
+import random
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any, TypeVar
 
+from pyspark.rdd import RDD
 from pyspark.sql import DataFrame, SparkSession
 
 logger = logging.getLogger("map_reduce_framework_spark.mapreduce")
@@ -104,6 +110,54 @@ def _merge_sorted_runs(
             cur_key, cur_vals, have = k, [v], True
     if have:
         yield cur_key, cur_vals
+
+
+#: keys each input partition keeps to place the range bounds: Spark's
+#: RangePartitioner samples 20 per output partition, oversampled 3×, and
+#: the object path has as many input partitions as output partitions
+_SAMPLE_PER_PARTITION = 60
+
+
+def _range_bounds(pairs: RDD, n: int) -> list:
+    """The n−1 keys cutting ``pairs``' keys into n ranges of about equal
+    weight, from ONE Spark job: each partition keeps a reservoir seeded
+    by its index, and each sampled key weighs its partition's size over
+    the reservoir's (Spark's ``RangePartitioner.determineBounds``).
+    Keys are compared with ``<`` only."""
+
+    def reservoir(index, part):
+        rng = random.Random(index)
+        sample: list = []
+        seen = 0
+        for seen, (k, _) in enumerate(part, 1):
+            if len(sample) < _SAMPLE_PER_PARTITION:
+                sample.append(k)
+            else:
+                j = rng.randrange(seen)
+                if j < _SAMPLE_PER_PARTITION:
+                    sample[j] = k
+        if sample:
+            yield seen / len(sample), sample
+
+    weighted = sorted(
+        (
+            (w, k)
+            for w, sample in pairs.mapPartitionsWithIndex(reservoir).collect()
+            for k in sample
+        ),
+        key=lambda wk: wk[1],
+    )
+    step = sum(w for w, _ in weighted) / n
+    bounds: list = []
+    cum = 0.0
+    for w, k in weighted:
+        cum += w
+        # strictly increasing bounds: comparator-equal keys share a range
+        if cum >= step * (len(bounds) + 1) and (not bounds or bounds[-1] < k):
+            bounds.append(k)
+            if len(bounds) == n - 1:
+                break
+    return bounds
 
 
 class MapReduceLogger:
@@ -198,12 +252,13 @@ def run_map_reduce(
             mrlog.worker("ExecMap", "created")
         mrlog.worker("Shuffle", "created")
     mapped = sc.parallelize(items, n).flatMap(lambda kv: map_fn(kv[0], kv[1]))
-    # Sort-based grouping: range-partition + per-partition sort use only
-    # __lt__ (via tuple-free keyfunc); comparator-equal keys land in the
-    # same partition and adjacently, then merge into whole groups (§2.3c,f).
-    grouped = mapped.sortBy(lambda kv: kv[0], numPartitions=n).mapPartitions(
-        _merge_sorted_runs, preservesPartitioning=True
-    )
+    # Sort-based grouping: range-partition (bisect) + per-partition sort
+    # use only __lt__ on keys; comparator-equal keys land in the same
+    # partition and adjacently, then merge into whole groups (§2.3c,f).
+    bounds = _range_bounds(mapped, n) if n > 1 else []
+    grouped = mapped.repartitionAndSortWithinPartitions(
+        n, lambda k: bisect.bisect_left(bounds, k)
+    ).mapPartitions(_merge_sorted_runs, preservesPartitioning=True)
     if mrlog:
         # materialize the grouped stage so the phase boundary (§2.3g) is
         # observable for the timing lines, like the reference's join
@@ -219,10 +274,12 @@ def run_map_reduce(
         for _ in range(n):
             mrlog.worker("ExecReduce", "created")
     reduced = grouped.flatMap(lambda kv: reduce_fn(kv[0], kv[1]))
-    # Global k3 sort (§2.3a).  collect() is the reference's returned
-    # OUT_ITEMS_LIST (:764) — the object path is a driver-side API by
-    # definition, mirroring the reference's single-process output list.
-    out = reduced.sortBy(lambda kv: kv[0], numPartitions=n).collect()
+    # Global k3 sort (§2.3a) on the driver: collect() is the reference's
+    # returned OUT_ITEMS_LIST (:764) — the object path is a driver-side
+    # API by definition, mirroring the reference's single-process output
+    # list — so a distributed sort would only add a sampling job and a
+    # shuffle.  sorted() is stable and compares k3s with ``<`` only.
+    out = sorted(reduced.collect(), key=lambda kv: kv[0])
     t2 = time.perf_counter_ns()
     if mrlog:
         grouped.unpersist(blocking=False)

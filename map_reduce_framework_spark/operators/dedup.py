@@ -1354,6 +1354,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     with skinny candidates the wide arrays cross the wire once per
     VERIFIED pair side, not once per candidate.
     """
+    return minhash_lsh_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
+
+
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`dedup_minhash_lsh` without the presentation sort — for
+    composition (e.g. the connected-components edge list), where the
+    consumer discards the order but would still pay the sort's
+    range-sampling job and exchange."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     # persist + materialize the signature table: both band-join sides
     # consume it, and without the count() barrier the join's two scan
@@ -1411,7 +1419,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.withColumn("jaccard", rnd(inter / union, 4))
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -2119,6 +2126,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximation; the oracle replicates the same blocking so outputs are
     exactly comparable.
     """
+    return simhash_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
+
+
+def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`dedup_simhash` without the presentation sort — for
+    composition (e.g. the connected-components edge list)."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
 
     # Signature computation is one Arrow-batched pass per document:
@@ -2201,7 +2214,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             hamming.alias("hamming"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
-        .orderBy("doc_a", "doc_b")
     )
 
 

@@ -13,7 +13,8 @@ use the same algorithm); iterations = graph diameter, which for near-dup
 clusters is tiny (they are dense blobs, not paths).  Convergence is
 detected by the monotone invariant Σlabels: labels only ever decrease, so
 an unchanged sum ⇒ fixpoint — one scalar action per iteration instead of
-a changed-row join.
+a changed-row join.  That action also returns Σid, which is Σlabels
+before the first sweep, so no action runs before the loop.
 
 The reference has no graph/iterative operators at all (SURVEY §2.4); this
 is part of the mandated LLM-pipeline extension surface.  The oracle is a
@@ -45,16 +46,15 @@ def connected_components(
     payload is two longs per edge, and AQE handles the skew of giant
     components.
     """
-    # localCheckpoint (eager) both materializes the iteration inputs and
+    # localCheckpoint both materializes the iteration inputs and
     # TRUNCATES LINEAGE — without it each round's plan embeds all prior
-    # rounds and Catalyst re-analysis dominates wall time.
-    # Round-14 job-count trim (guide §1.2: scheduling is per-task work
-    # too): every localCheckpoint here is LAZY and immediately
-    # materialized by the convergence-sum collect that follows, so each
-    # iteration schedules ONE job (checkpoint + Σlabels fused) instead
-    # of two.  Lineage truncation is unchanged — the checkpoint happens
-    # as a side effect of the sum job's computation, and the next
-    # iteration reads the materialized blocks.
+    # rounds and Catalyst re-analysis dominates wall time.  Every
+    # checkpoint here is LAZY, but under AQE defining one still runs
+    # each of its plan's shuffle stages as a job (AQE materializes the
+    # query stages to plan the final one), and the checkpointed blocks
+    # themselves are written by the convergence-sum collect that follows.
+    # Measured at local[2]: a sweep is 7 jobs at its checkpoint plus 2
+    # for the scalar collect; the initial labels cost 1 (the distinct).
     sym = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
@@ -66,7 +66,7 @@ def connected_components(
         .withColumn("label", F.col("id"))
         .localCheckpoint(eager=False)
     )
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
+    prev_sum = None
 
     for _ in range(MAX_CC_ITERATIONS):
         # (1) edge relax: min label among neighbors
@@ -93,8 +93,9 @@ def connected_components(
             )
             .localCheckpoint(eager=False)
         )
-        new_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if new_sum == prev_sum:
+        # every sweep keeps each id exactly once, so Σid = initial Σlabels
+        new_sum, sum_ids = labels.agg(F.sum("label"), F.sum("id")).collect()[0]
+        if new_sum == (sum_ids if prev_sum is None else prev_sum):
             break
         prev_sum = new_sum
     return labels
@@ -104,7 +105,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resolve simhash near-dup pairs into clusters: every clustered doc
     with its cluster id (= lowest doc_id in the cluster) and a canonical
     flag — the "which copy do we keep" answer of the dedup pipeline."""
-    pairs = dedup.dedup_simhash(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = dedup.simhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
     labels = connected_components(pairs, "doc_a", "doc_b")
     return (
         labels.select(
@@ -151,7 +152,7 @@ def keeplist_unsorted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") != F.col("root"))
         .select(F.col("root").alias("doc_a"), F.col("doc_id").alias("doc_b"))
     )
-    near_edges = dedup.dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+    near_edges = dedup.minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     labels = connected_components(
         exact_edges.union(near_edges), "doc_a", "doc_b"
     ).select(F.col("id").alias("doc_id"), F.col("label").alias("cl"))
@@ -280,7 +281,7 @@ def pagerank_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, so the DuckDB oracle replays it exactly with one CTE
     block per iteration (4-dp-rounded output absorbs summation-order
     drift)."""
-    pairs = dedup.dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = dedup.minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(
@@ -346,7 +347,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB.  Membership explodes 3 rows per triangle into a
     partial-aggregated count per node; clustering = 2T / deg(deg-1).
     """
-    pairs = dedup.dedup_simhash(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = dedup.simhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
     from ..cache import persist_tracked
 
     p = persist_tracked(pairs)
@@ -764,7 +765,7 @@ def kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     No counterpart in the reference (SURVEY §2.4 extension: graph
     family alongside CC / PageRank / triangles).
     """
-    pairs = dedup.dedup_simhash(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = dedup.simhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
     return kcore_from_pairs(pairs)
 
 

@@ -1173,6 +1173,13 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     No counterpart in the reference (SURVEY §2.4 extension; multimodal
     training-data-pipeline family).
     """
+    return image_phash_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
+
+
+def image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`dedup_image_phash` without the presentation sort — for
+    composition (the connected-components edge list of
+    :func:`media_dedup_clusters`)."""
     from ..cache import persist_tracked
     from ..sources.tables import table_row_count
 
@@ -1193,7 +1200,8 @@ def _banded_hamming_pairs(bands: DataFrame) -> DataFrame:
     fingerprints (image aHash, audio delta-sign): explode the 4 band
     values into band keys, equi-join, verify exact Hamming ≤
     ``PHASH_MAX_HAMMING`` — lossless at ham ≤ 3 < 4 bands (pigeonhole,
-    the dedup_simhash construction)."""
+    the dedup_simhash construction).  Unsorted: the public pair queries
+    add the ``orderBy``."""
     chunks = bands.select(
         "doc_id",
         "b0",
@@ -1229,7 +1237,6 @@ def _banded_hamming_pairs(bands: DataFrame) -> DataFrame:
             hamming.cast("int").alias("hamming"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -1465,6 +1472,13 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     No counterpart in the reference (SURVEY §2.4 extension; multimodal
     training-data-pipeline family).
     """
+    return audio_fingerprint_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
+
+
+def audio_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`dedup_audio_fingerprint` without the presentation sort —
+    for composition (the connected-components edge list of
+    :func:`media_dedup_clusters`)."""
     from ..cache import persist_tracked
     from ..sources.tables import table_row_count
 
@@ -1523,10 +1537,10 @@ def media_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph import connected_components
 
     pairs = (
-        dedup_image_phash(spark, sf_dir)
+        image_phash_pairs(spark, sf_dir)
         .select("doc_a", "doc_b")
         .union(
-            dedup_audio_fingerprint(spark, sf_dir).select("doc_a", "doc_b")
+            audio_fingerprint_pairs(spark, sf_dir).select("doc_a", "doc_b")
         )
     )
     labels = connected_components(pairs, "doc_a", "doc_b")

@@ -14,7 +14,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from map_reduce_framework_spark.mapreduce import run_map_reduce
 from map_reduce_framework_spark.operators.dedup import fan_out
+from map_reduce_framework_spark.operators.graph import connected_components
 from map_reduce_framework_spark.plans.registry import QUERIES
 from map_reduce_framework_spark.sources import tables
 from map_reduce_framework_spark.sources.tables import TABLES, load_table
@@ -98,3 +100,42 @@ def test_schema_conf_change_misses_the_memo(spark, tmp_path):
     assert n == 0
     _, n = _jobs(b, lambda: load_table(b, str(tmp_path), "region"))
     assert n == 1
+
+
+def _word_map(k, v):
+    for w in v.split():
+        yield w, 1
+
+
+def _sum_reduce(k, vals):
+    yield k, sum(vals)
+
+
+@pytest.mark.parametrize("n, budget", [(1, 1), (2, 2), (4, 2)])
+def test_run_map_reduce_jobs(spark, n, budget):
+    """One job samples the range bounds (none at n = 1), one shuffles,
+    reduces and collects; the k3 sort runs on the driver."""
+    items = [(i, f"w{i % 7} w{i % 3} x{i % 11}") for i in range(200)]
+    out, jobs = _jobs(
+        spark, lambda: run_map_reduce(spark, items, _word_map, _sum_reduce, n)
+    )
+    assert jobs == budget
+    assert sum(c for _, c in out) == 600
+
+
+#: (edge list, jobs of connected_components plus collecting its result);
+#: the inputs converge in 2, 7, 1 and 1 sweeps
+CC_INPUTS = {
+    "6-clique": ([(i, j) for i in range(6) for j in range(i + 1, 6)], 20),
+    "64-vertex path": ([(i, i + 1) for i in range(63)], 65),
+    "self-loops only": ([(i, i) for i in range(5)], 11),
+    "empty edge list": ([], 4),
+}
+
+
+@pytest.mark.parametrize("name", CC_INPUTS)
+def test_connected_components_jobs(spark, name):
+    edges, budget = CC_INPUTS[name]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    _, jobs = _jobs(spark, lambda: connected_components(df, "src", "dst").collect())
+    assert jobs == budget

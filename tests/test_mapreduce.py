@@ -139,16 +139,70 @@ def test_comparator_equivalence_grouping(spark):
     assert_equivalent(got, want)
 
 
+class LtOnlyKey:
+    """A key that can ONLY be compared with ``<``: equality and hashing
+    raise, so any grouping, partitioning or sorting step that consults
+    them fails the test."""
+
+    def __init__(self, n):
+        self.n = n
+
+    def __lt__(self, other):
+        return self.n < other.n
+
+    def __eq__(self, other):
+        raise AssertionError("key compared with ==")
+
+    def __hash__(self):
+        raise AssertionError("key hashed")
+
+
+def m_lt_only_key(k, v):
+    yield LtOnlyKey(k % 5), v
+
+
+def r_lt_only_stats(k, vals):
+    yield LtOnlyKey(k.n), (len(vals), sum(vals))
+
+
+def test_grouping_uses_lt_only(spark):
+    items = [(i, i) for i in range(60)]
+    got = run_map_reduce(spark, items, m_lt_only_key, r_lt_only_stats, 4)
+    assert [(k.n, v) for k, v in got] == [
+        (j, (12, sum(range(j, 60, 5)))) for j in range(5)
+    ]
+
+
+def test_all_keys_comparator_equal(spark):
+    # one equivalence class over many partitions: every value reaches one
+    # reduce call, however the range bounds fall (§2.3c,f)
+    items = [(i, i) for i in range(50)]
+
+    def m_one_class(k, v):
+        yield CmpKey(7), v
+
+    got = run_map_reduce(spark, items, m_one_class, r_key_stats, 4)
+    assert got == [(7, (50, sum(range(50))))]
+
+
+def test_more_partitions_than_keys(spark):
+    items = [(i, i) for i in range(30)]
+    got = run_map_reduce(spark, items, m_wrap_key, r_key_stats, 16)
+    assert_equivalent(got, run_map_reduce_local(items, m_wrap_key, r_key_stats))
+    assert len(got) == 4
+
+
 def test_empty_input(spark):
     assert run_map_reduce(spark, [], m_identity, r_count) == []
 
 
 def test_zero_emit_map(spark):
-    # map that never emits -> empty output (§2.3e)
+    # map that never emits -> empty output (§2.3e); at 2 partitions the
+    # range bounds come from an empty sample
     def m_none(k, v):
         return iter(())
 
-    assert run_map_reduce(spark, [(1, 1), (2, 2)], m_none, r_count) == []
+    assert run_map_reduce(spark, [(1, 1), (2, 2)], m_none, r_count, 2) == []
 
 
 def test_duplicates_preserved(spark):

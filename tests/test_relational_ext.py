@@ -131,18 +131,25 @@ def test_ann_ivf_recall_vs_exact(spark):
 
 def test_connected_components_property(spark):
     """Distributed CC must agree with a pure-Python union-find on random
-    small graphs (chains, cliques, isolated pairs, self-loops)."""
+    small graphs (chains, cliques, isolated pairs, self-loops), an empty
+    edge list, a self-loop-only graph and a 64-vertex path."""
     import random
 
     from map_reduce_framework_spark.operators.graph import connected_components
 
     rng = random.Random(7)
-    for trial in range(3):
+    graphs = []
+    for _ in range(3):
         n = rng.randint(5, 30)
-        edges = [
-            (rng.randint(0, n), rng.randint(0, n))
-            for _ in range(rng.randint(3, 40))
-        ]
+        graphs.append(
+            [(rng.randint(0, n), rng.randint(0, n)) for _ in range(rng.randint(3, 40))]
+        )
+    graphs += [
+        [],  # no vertices at all
+        [(i, i) for i in range(5)],  # self-loops only: sweep 1 changes nothing
+        [(i, i + 1) for i in range(63)],  # a 64-vertex path: several sweeps
+    ]
+    for trial, edges in enumerate(graphs):
         # union-find reference
         parent = {}
 
