@@ -30,7 +30,6 @@ itself).
 from __future__ import annotations
 
 import logging
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
@@ -38,13 +37,10 @@ from pyspark.sql import DataFrame
 logger = logging.getLogger("map_reduce_framework_spark.parallel")
 
 
-def overlap_enabled() -> bool:
-    """Branch overlap is on by default; ``SPARK_GRAFT_OVERLAP=0``
-    disables it (sequential materialization by the final action — the
-    pre-round-15 shape).  The switch exists for (a) single-session A/B
-    measurement of the overlap itself and (b) deployments that must not
-    run driver threads."""
-    return os.environ.get("SPARK_GRAFT_OVERLAP", "1") != "0"
+#: Branch overlap on; off is the sequential shape, where the final action
+#: materializes every branch.  Tests flip it to pin that both shapes
+#: return the same rows.
+OVERLAP = True
 
 
 class _Handle:
@@ -99,10 +95,10 @@ def co_materialize(df: DataFrame, desc: str | None = None):
     query's construction; the body's exception wins, and the background
     one is logged with its cause instead of being raised.
 
-    With :func:`overlap_enabled` off this is a no-op (``df`` stays
-    lazy; the final action computes it, the sequential shape).
+    With :data:`OVERLAP` off this is a no-op (``df`` stays lazy; the
+    final action computes it, the sequential shape).
     """
-    if not overlap_enabled():
+    if not OVERLAP:
         yield None
         return
     h = materialize_async(df, desc)

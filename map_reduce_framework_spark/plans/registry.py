@@ -8,7 +8,9 @@ but an oracle without a query is a bug, as is a duplicate name.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+from collections.abc import Callable, Iterable, Mapping
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,135 +48,61 @@ _MODULES = [
     udfs,
 ]
 
-# The external correctness driver checks only the FIRST 50 ``queries()``
-# entries in insertion order.  Round-15 curation (an OPTIMIZATION round:
-# no new queries, every change output-identical — overlap scheduling,
-# the mapInArrow kernel conversion pinned bit-for-bit by
-# test_stopword_gopher_kernels_match_python, the scan partition count
-# fan_out reads (Spark's own, memoized by sources.tables.scan_partitions)
-# — so per the round-12 output-identical precedent nothing is
-# FORCED into the window; the window pays rotation debt instead):
-# (a) FIRST, the FORTY-EIGHT r11-latest rows round 14 deferred (the
-# contract pinned in round 14's registry comment and
-# test_registry_order.py: they would be 4 rounds stale otherwise and
-# MUST rotate in first): ann_index_maintain .. window_rank_lag, exactly
-# the pinned list, in the pinned (alphabetical) order.
-# (b) the two oldest remaining rows (r12-latest, alphabetical):
-# agg_view_maintain, and ccnet_buckets — which is also this round's
-# most-touched query (branch overlap + the decade-3 re-probe), so the
-# fresh driver row doubles as its post-change evidence.
-# approx_distinct_hll / approx_percentile_summary rotate back OUT after
-# round 14's one-time rows-only contact, per that round's pinned plan:
-# sketches can never hash-match DuckDB (different internals), and their
-# accuracy pytests vs exact twins remain the real gate
-# (tests/test_audit.py) — the driver contract for them is DOCUMENTED as
-# rows-only, once, already recorded in CORRECTNESS_r14.json.
-# ROUND-16 ROTATION DEBT (the 45 remaining r12-latest rows, all
-# unchanged-code shapes with prior driver greens):
-# contamination_embedding,
-# date_arithmetic,
-# dedup_clusters,
-# dedup_exact,
-# dedup_exact_normalized,
-# dedup_index_maintain,
-# dedup_simhash,
-# distinct_keys,
-# embedding_norm_stats,
-# events_interval_join,
-# filter_project,
-# frame_sample_schedule,
-# funnel_analysis,
-# graph_triangle_stats,
-# group_having,
-# hash_sample,
-# histogram_totalprice,
-# join_anti,
-# join_cross,
-# join_outer,
-# join_semi,
-# kmeans_embeddings,
-# kn_perplexity_heldout,
-# lateral_posexplode,
-# payload_chunks,
-# percentile_summary,
-# pivot_priority,
-# quality_classifier_eval,
-# rollup_agg,
-# search_substring,
-# session_window_agg,
-# set_except,
-# set_intersect_all,
-# stats_agg,
-# tokenizer_fertility,
-# top_k,
-# tpch_q11_important_stock,
-# tpch_q16_supplier_part_count,
-# tpch_q20_promo_stock_suppliers,
-# tpch_q5_local_supplier_volume,
-# tpch_q9_product_type_profit,
-# training_manifest,
-# unpivot_measures,
-# window_extended,
-# wordcount,
-# They will be 4 rounds stale after round 16 — rotate them in FIRST
-# next round, same contract as the r11 debt this round honours.
-# Queries NOT listed follow in module order; every one has a green
-# r08-r15 row.
-DRIVER_WINDOW = [
-    # (a) round-14 deferred r11 rows — rotated in FIRST per contract
-    "ann_index_maintain",
-    "bm25_topk",
-    "bpe_pair_stats",
-    "chunk_documents",
-    "cohort_retention",
-    "cube_agg",
-    "dedup_span_clip",
-    "dedup_suffix_spans",
-    "dsir_sample",
-    "ewma_smooth_segmented",
-    "expectations_audit",
-    "interval_coalesce",
-    "join_skew_salted",
-    "json_extract",
-    "kn_perplexity",
-    "map_functions",
-    "mr_inverted_index_facade",
-    "multi_distinct_agg",
-    "pagerank_dup_graph",
-    "pii_redact",
-    "pricing_summary",
-    "quality_classifier_score",
-    "quality_weighted_sample",
-    "record_linkage_scores",
-    "scd2_apply",
-    "search_dir_listing",
-    "sessionize",
-    "set_except_all",
-    "set_intersect",
-    "split_leakage_check",
-    "string_agg_sorted",
-    "top_k_per_group",
-    "tpch_q10_returned_items",
-    "tpch_q12_priority_lateness",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity",
-    "tpch_q18_large_volume",
-    "tpch_q19_discounted_revenue",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_global_sales_opportunity",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "window_rank_lag",
-    # (b) oldest remaining evidence (r12-latest), alphabetical; ccnet
-    # also carries this round's overlap change
-    "agg_view_maintain",
+#: The external correctness driver checks only the first ``WINDOW``
+#: entries of ``queries()``, in insertion order.
+WINDOW = 50
+
+#: The driver's records, ``CORRECTNESS_rN.json`` (N = round), sit at the
+#: repo root.
+RECORDS = Path(__file__).resolve().parents[2]
+
+#: The one hand-kept input to the window: rows whose plan changed this
+#: round, so they get a fresh driver row now whatever their last green
+#: round.  Keep it short — it may not push out any row of the stalest
+#: round (``tests/test_registry_order.py`` checks that).  Now: the two
+#: branch-overlap composites with no driver row since the overlap, and
+#: three graph consumers whose plans lost a discarded sort or collect.
+CHANGED = [
     "ccnet_buckets",
+    "clean_corpus",
+    "dedup_keeplist_quality",
+    "media_dedup_clusters",
+    "pagerank_dup_graph",
 ]
+
+
+def last_green_rounds(records: Path) -> dict[str, int]:
+    """Each query's last green round: the highest N among
+    ``records/CORRECTNESS_rN.json`` whose row for it has no error and
+    matching rows, schema and hash.  A malformed record raises."""
+    green: dict[str, int] = {}
+    for path in sorted(records.glob("CORRECTNESS_r*.json")):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, row in json.loads(path.read_text()).items():
+            if (
+                row["err"] is None
+                and row["rows_match"]
+                and row["schema_match"]
+                and row["hash_match"]
+            ):
+                green[name] = max(green.get(name, 0), rnd)
+    return green
+
+
+def driver_window(
+    queries: Iterable[str],
+    oracles: Mapping[str, str],
+    records: Path,
+    changed: list[str],
+) -> list[str]:
+    """The ``WINDOW`` oracle-backed queries the driver should check next:
+    stalest last green round first, ties alphabetical.  A name in
+    ``changed`` and a query never green both count as round 0."""
+    green = last_green_rounds(records)
+    return sorted(
+        (name for name in queries if name in oracles),
+        key=lambda name: (0 if name in changed else green.get(name, 0), name),
+    )[:WINDOW]
 
 
 def _structural_release(fn: Callable) -> Callable:
@@ -200,7 +128,7 @@ def _structural_release(fn: Callable) -> Callable:
     return run
 
 
-def _collect() -> tuple[dict, dict]:
+def _collect() -> tuple[dict, dict, list[str]]:
     queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     oracles: dict[str, str] = {}
     for mod in _MODULES:
@@ -215,22 +143,20 @@ def _collect() -> tuple[dict, dict]:
     missing = set(oracles) - set(queries)
     if missing:
         raise ValueError(f"oracles without queries: {sorted(missing)}")
-    unknown = set(DRIVER_WINDOW) - set(queries)
+    unknown = set(CHANGED) - set(queries)
     if unknown:
-        raise ValueError(f"DRIVER_WINDOW names without queries: {sorted(unknown)}")
-    if len(DRIVER_WINDOW) != len(set(DRIVER_WINDOW)):
-        raise ValueError("duplicate names in DRIVER_WINDOW")
-    # Reorder: curated driver window first, remaining queries after in
-    # module order.  dict preserves insertion order, which is what the
-    # driver's 50-entry check consumes.
-    ordered = {name: queries[name] for name in DRIVER_WINDOW}
+        raise ValueError(f"CHANGED names without queries: {sorted(unknown)}")
+    # The driver window first, the other queries after it in module
+    # order: dict insertion order is what the driver's check consumes.
+    window = driver_window(queries, oracles, RECORDS, CHANGED)
+    ordered = {name: queries[name] for name in window}
     ordered.update(
         {name: fn for name, fn in queries.items() if name not in ordered}
     )
-    return ordered, oracles
+    return ordered, oracles, window
 
 
-QUERIES, ORACLES = _collect()
+QUERIES, ORACLES, DRIVER_WINDOW = _collect()
 
 
 def get_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -21,22 +21,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "map_reduce_framework_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or reuse) a SparkSession with the engine's defaults: both
+    the ``local`` core count and the default shuffle partitions come from
+    ``$SPARK_GRAFT_CPUS`` (32 when unset)."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -3,8 +3,17 @@
 Runs each named query (default: the 50-entry ``DRIVER_WINDOW``) on a
 deliberately VANILLA SparkSession at sf0.01 alongside its DuckDB oracle
 and applies the same compare the driver does (row count + column names +
-order-insensitive canonicalized values).  Use before round end to
-pre-validate a window rotation:
+order-insensitive canonicalized values).
+
+The window is not kept by hand: ``plans.registry.driver_window`` takes
+the oracle-backed queries by their last green round in the repo-root
+``CORRECTNESS_rN.json`` records (never green counts as round 0), ties
+alphabetical, with the short ``registry.CHANGED`` list (rows whose plan
+changed this round) at round 0.  Print the upcoming window with
+
+    python -c "from map_reduce_framework_spark.plans import registry; print(registry.DRIVER_WINDOW)"
+
+and pre-validate it before round end:
 
     python scripts/driver_sim.py                # the driver window
     python scripts/driver_sim.py tpch_q2_min_cost_supplier wordcount
@@ -94,7 +103,7 @@ def main(argv: list[str]) -> int:
     elif argv:
         names = argv
     else:
-        names = list(registry.QUERIES)[:50]
+        names = registry.DRIVER_WINDOW
     print("engines:", json.dumps(engine_versions()))
 
     spark = (

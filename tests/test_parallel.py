@@ -5,20 +5,8 @@ from __future__ import annotations
 
 import pytest
 
-from map_reduce_framework_spark.parallel import (
-    co_materialize,
-    materialize_async,
-    overlap_enabled,
-)
-
-
-def test_overlap_enabled_env_toggle(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_OVERLAP", raising=False)
-    assert overlap_enabled()
-    monkeypatch.setenv("SPARK_GRAFT_OVERLAP", "0")
-    assert not overlap_enabled()
-    monkeypatch.setenv("SPARK_GRAFT_OVERLAP", "1")
-    assert overlap_enabled()
+from map_reduce_framework_spark import parallel
+from map_reduce_framework_spark.parallel import co_materialize, materialize_async
 
 
 def test_materialize_async_populates_persist(spark):
@@ -72,7 +60,7 @@ def test_co_materialize_body_error_wins(spark, caplog):
 
 
 def test_co_materialize_noop_when_disabled(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_OVERLAP", "0")
+    monkeypatch.setattr(parallel, "OVERLAP", False)
     df = spark.range(10)
     with co_materialize(df, "test: disabled") as h:
         assert h is None  # sequential shape: nothing scheduled
@@ -94,8 +82,8 @@ def test_overlap_results_identical_both_modes(spark, monkeypatch):
         spark.catalog.clearCache()
         return rows
 
-    monkeypatch.setenv("SPARK_GRAFT_OVERLAP", "1")
+    monkeypatch.setattr(parallel, "OVERLAP", True)
     on = run()
-    monkeypatch.setenv("SPARK_GRAFT_OVERLAP", "0")
+    monkeypatch.setattr(parallel, "OVERLAP", False)
     off = run()
     assert on == off

@@ -1,239 +1,91 @@
-"""The driver checks only the first 50 ``queries()`` entries (insertion
-order) — lock in what lands inside that window.
-
-Round-15 policy (an OPTIMIZATION round — no new queries, every change
-output-identical, so nothing is forced into the window and it pays
-rotation debt instead): the window holds (a) FIRST the 48 r11-latest
-rows round 14 deferred — the pre-planned debt, honoured exactly as
-pinned in round 14's registry comment — and (b) the two oldest
-remaining rows (r12-latest, alphabetical): agg_view_maintain and
-ccnet_buckets, the latter doubling as fresh driver evidence for this
-round's most-touched query (branch overlap + decade-3 re-probe).  The
-approx sketches rotate back OUT after round 14's one-time rows-only
-contact per that round's pinned plan; their accuracy pytests vs exact
-twins remain the real gate.  The 45 remaining r12-latest rows are
-deferred to round 16 (named in registry.py — rotate them in FIRST next
-round).
-"""
+"""The driver checks only the first ``registry.WINDOW`` ``queries()``
+entries (insertion order).  The window is chosen by a rule over the
+driver's own records (``registry.driver_window``): these tests pin the
+rule on fake records and its invariants on the real ones."""
 
 from __future__ import annotations
 
 import json
-import os
+
+import pytest
 
 from map_reduce_framework_spark.plans import registry
 
-#: r11-latest rows deferred by round 14 — the debt this window pays FIRST
-DEFERRED_FROM_R14 = [
-    "ann_index_maintain",
-    "bm25_topk",
-    "bpe_pair_stats",
-    "chunk_documents",
-    "cohort_retention",
-    "cube_agg",
-    "dedup_span_clip",
-    "dedup_suffix_spans",
-    "dsir_sample",
-    "ewma_smooth_segmented",
-    "expectations_audit",
-    "interval_coalesce",
-    "join_skew_salted",
-    "json_extract",
-    "kn_perplexity",
-    "map_functions",
-    "mr_inverted_index_facade",
-    "multi_distinct_agg",
-    "pagerank_dup_graph",
-    "pii_redact",
-    "pricing_summary",
-    "quality_classifier_score",
-    "quality_weighted_sample",
-    "record_linkage_scores",
-    "scd2_apply",
-    "search_dir_listing",
-    "sessionize",
-    "set_except_all",
-    "set_intersect",
-    "split_leakage_check",
-    "string_agg_sorted",
-    "top_k_per_group",
-    "tpch_q10_returned_items",
-    "tpch_q12_priority_lateness",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity",
-    "tpch_q18_large_volume",
-    "tpch_q19_discounted_revenue",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_global_sales_opportunity",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "window_rank_lag",
-]
-
-#: r12-latest rows deferred to round 16 — rotate these in FIRST next
-#: round (they go 4 rounds stale otherwise)
-DEFERRED_TO_R16 = {
-    "contamination_embedding",
-    "date_arithmetic",
-    "dedup_clusters",
-    "dedup_exact",
-    "dedup_exact_normalized",
-    "dedup_index_maintain",
-    "dedup_simhash",
-    "distinct_keys",
-    "embedding_norm_stats",
-    "events_interval_join",
-    "filter_project",
-    "frame_sample_schedule",
-    "funnel_analysis",
-    "graph_triangle_stats",
-    "group_having",
-    "hash_sample",
-    "histogram_totalprice",
-    "join_anti",
-    "join_cross",
-    "join_outer",
-    "join_semi",
-    "kmeans_embeddings",
-    "kn_perplexity_heldout",
-    "lateral_posexplode",
-    "payload_chunks",
-    "percentile_summary",
-    "pivot_priority",
-    "quality_classifier_eval",
-    "rollup_agg",
-    "search_substring",
-    "session_window_agg",
-    "set_except",
-    "set_intersect_all",
-    "stats_agg",
-    "tokenizer_fertility",
-    "top_k",
-    "tpch_q11_important_stock",
-    "tpch_q16_supplier_part_count",
-    "tpch_q20_promo_stock_suppliers",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q9_product_type_profit",
-    "training_manifest",
-    "unpivot_measures",
-    "window_extended",
-    "wordcount",
-}
-
-#: sketches: no DuckDB oracle is POSSIBLE (different sketch internals);
-#: their one-time rows-only driver contact happened in round 14
-#: (CORRECTNESS_r14.json) — they stay OUT of the window from now on and
-#: their accuracy pytests vs exact twins remain the real gate
-NO_ORACLE_BY_DESIGN = {"approx_distinct_hll", "approx_percentile_summary"}
-
-PRIOR_ROUNDS = (
-    "CORRECTNESS_r01.json",
-    "CORRECTNESS_r03.json",
-    "CORRECTNESS_r04.json",
-    "CORRECTNESS_r05.json",
-    "CORRECTNESS_r06.json",
-    "CORRECTNESS_r07.json",
-    "CORRECTNESS_r08.json",
-    "CORRECTNESS_r09.json",
-    "CORRECTNESS_r10.json",
-    "CORRECTNESS_r11.json",
-    "CORRECTNESS_r12.json",
-    "CORRECTNESS_r13.json",
-    "CORRECTNESS_r14.json",
-)
+GREEN = {"err": None, "rows_match": True, "schema_match": True, "hash_match": True}
+RED = {**GREEN, "hash_match": False}
 
 
-def _prior_checked() -> set[str]:
-    checked: set[str] = set()
-    for rec in PRIOR_ROUNDS:
-        path = os.path.join(os.path.dirname(__file__), "..", rec)
-        if os.path.exists(path):
-            checked |= set(json.load(open(path)))
-    return checked
+def _record(tmp_path, rnd: int, rows: dict) -> None:
+    (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+
+def test_rule_on_fake_records(tmp_path):
+    _record(tmp_path, 1, {"a": GREEN, "b": GREEN, "c": GREEN, "d": GREEN})
+    _record(tmp_path, 2, {"a": RED, "b": GREEN, "d": GREEN})
+    _record(tmp_path, 3, {"c": GREEN})
+    assert registry.last_green_rounds(tmp_path) == {"a": 1, "b": 2, "c": 3, "d": 2}
+    oracles = dict.fromkeys("abcdn", "SELECT 1")
+
+    def window(changed):
+        return registry.driver_window("dcbaxn", oracles, tmp_path, changed)
+
+    # n never went green; a red row does not count, so a sorts at r1; b and
+    # d tie at r2 and go alphabetically; x has no oracle
+    assert window([]) == ["n", "a", "b", "d", "c"]
+    # a CHANGED name counts as round 0: ahead of every green row, even
+    # the stalest
+    assert window(["c"]) == ["c", "n", "a", "b", "d"]
+
+
+def test_changed_names_must_be_queries(monkeypatch):
+    monkeypatch.setattr(registry, "CHANGED", ["no_such_query"])
+    with pytest.raises(ValueError, match="no_such_query"):
+        registry._collect()
 
 
 def test_driver_window_is_first_50():
-    keys = list(registry.get_queries().keys())
-    assert keys[: len(registry.DRIVER_WINDOW)] == registry.DRIVER_WINDOW
-    assert len(registry.DRIVER_WINDOW) == 50
-
-
-def test_r14_debt_paid_first():
-    """The 48 r11 rows round 14 deferred must head the window, in order
-    — the rotation contract test_registry_order pinned last round."""
-    assert (
-        registry.DRIVER_WINDOW[: len(DEFERRED_FROM_R14)] == DEFERRED_FROM_R14
-    )
-
-
-def test_deferred_rows_are_known_and_green_elsewhere():
-    """Every deferred row must be a real query with a prior driver
-    green (they are debt, not gaps)."""
-    window = set(registry.DRIVER_WINDOW)
-    assert not (DEFERRED_TO_R16 & window)
-    assert DEFERRED_TO_R16 <= set(registry.get_queries())
-    assert DEFERRED_TO_R16 <= _prior_checked()
-
-
-def test_no_evidence_older_than_r12_after_this_round():
-    """The round-15 freshness goal: after this window lands, no
-    query's newest driver row may be older than round 12 — i.e. every
-    query whose newest green is r11 or older must be IN the window
-    now (the sketches are exempt: their round-14 rows-only contact is
-    their permanent driver record)."""
-    latest: dict[str, int] = {}
-    for rec in PRIOR_ROUNDS:
-        path = os.path.join(os.path.dirname(__file__), "..", rec)
-        if os.path.exists(path):
-            rnum = int(rec.split("_r")[1][:2])
-            for q in json.load(open(path)):
-                latest[q] = max(latest.get(q, 0), rnum)
-    window = set(registry.DRIVER_WINDOW)
-    stale = {
-        q
-        for q, r in latest.items()
-        if r < 12 and q in registry.get_queries()
-    } - NO_ORACLE_BY_DESIGN
-    assert stale <= window, (
-        f"r11-or-older evidence left outside: {sorted(stale - window)}"
-    )
-
-
-def test_no_oracle_sketches_rotated_back_out():
-    """The sketches had their one-time rows-only contact in round 14
-    (recorded in CORRECTNESS_r14.json) and rotate back out per that
-    round's pinned plan; they must still be registered, oracle-less,
-    and covered by the accuracy pytests."""
-    window = set(registry.DRIVER_WINDOW)
-    assert not (NO_ORACLE_BY_DESIGN & window)
-    for name in NO_ORACLE_BY_DESIGN:
-        assert name in registry.get_queries()
-        assert name not in registry.get_oracles()
-    assert NO_ORACLE_BY_DESIGN <= _prior_checked()
+    keys = list(registry.get_queries())
+    assert len(registry.DRIVER_WINDOW) == registry.WINDOW
+    assert keys[: registry.WINDOW] == registry.DRIVER_WINDOW
 
 
 def test_every_window_query_has_an_oracle():
-    """With the sketches out, the window is 100% oracle-backed — the
-    round-14 verdict's no_oracle cap on correct_pct is resolved."""
     missing = set(registry.DRIVER_WINDOW) - set(registry.get_oracles())
     assert not missing, f"window rows with no oracle: {sorted(missing)}"
 
 
+def test_window_takes_the_stalest_rows():
+    green = registry.last_green_rounds(registry.RECORDS)
+    window = set(registry.DRIVER_WINDOW)
+    oracle_backed = set(registry.get_oracles())
+    picked = [green.get(q, 0) for q in window - set(registry.CHANGED)]
+    left_out = [green.get(q, 0) for q in oracle_backed - window]
+    assert min(left_out, default=99) >= max(picked, default=0)
+    stalest = min(green.get(q, 0) for q in oracle_backed)
+    stale_rows = {q for q in oracle_backed if green.get(q, 0) == stalest}
+    assert stale_rows <= window, (
+        f"CHANGED pushes stalest rows out: {sorted(stale_rows - window)}"
+    )
+
+
 def test_every_query_has_a_driver_row_across_rounds():
-    """Every registered checkable query either has a driver row from a
-    prior round or sits in the current window (so it gets one now)."""
-    checked = set(registry.DRIVER_WINDOW) | _prior_checked()
-    unchecked = set(registry.get_queries()) - checked - NO_ORACLE_BY_DESIGN
+    """Every oracle-backed query has been green once, or is in the
+    window now."""
+    green = registry.last_green_rounds(registry.RECORDS)
+    unchecked = set(registry.get_oracles()) - set(green) - set(registry.DRIVER_WINDOW)
     assert not unchecked, f"never driver-checked: {sorted(unchecked)}"
+
+
+def test_changed_rows_in_window():
+    assert {"clean_corpus", "dedup_keeplist_quality"} <= set(registry.CHANGED)
+    assert set(registry.CHANGED) <= set(registry.DRIVER_WINDOW)
 
 
 def test_every_query_still_registered():
     # the reorder must not drop or duplicate anything
-    names = list(registry.get_queries().keys())
+    names = list(registry.get_queries())
     assert len(names) == len(set(names))
-    assert set(registry.DRIVER_WINDOW) <= set(names)
+    registered = {
+        name for mod in registry._MODULES for name in getattr(mod, "QUERIES", {})
+    }
+    assert set(names) == registered
