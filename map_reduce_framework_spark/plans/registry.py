@@ -48,19 +48,19 @@ _MODULES = [
     udfs,
 ]
 
-#: The external correctness driver checks only the first ``WINDOW``
-#: entries of ``queries()``, in insertion order.
+#: A correctness pass checks only the first ``WINDOW`` entries of
+#: ``queries()``, in insertion order.
 WINDOW = 50
 
-#: The driver's records, ``CORRECTNESS_rN.json`` (N = round), sit at the
-#: repo root.
+#: The correctness records, ``CORRECTNESS_rN.json`` (N = round), sit at
+#: the repo root.
 RECORDS = Path(__file__).resolve().parents[2]
 
 #: The one hand-kept input to the window: rows whose plan changed this
-#: round, so they get a fresh driver row now whatever their last green
+#: round, so they get a fresh correctness row now whatever their last green
 #: round.  Keep it short — it may not push out any row of the stalest
 #: round (``tests/test_registry_order.py`` checks that).  Now: the two
-#: branch-overlap composites with no driver row since the overlap, and
+#: branch-overlap composites with no correctness row since the overlap, and
 #: three graph consumers whose plans lost a discarded sort or collect.
 CHANGED = [
     "ccnet_buckets",
@@ -95,7 +95,7 @@ def driver_window(
     records: Path,
     changed: list[str],
 ) -> list[str]:
-    """The ``WINDOW`` oracle-backed queries the driver should check next:
+    """The ``WINDOW`` oracle-backed queries the next correctness pass checks:
     stalest last green round first, ties alphabetical.  A name in
     ``changed`` and a query never green both count as round 0."""
     green = last_green_rounds(records)
@@ -146,8 +146,8 @@ def _collect() -> tuple[dict, dict, list[str]]:
     unknown = set(CHANGED) - set(queries)
     if unknown:
         raise ValueError(f"CHANGED names without queries: {sorted(unknown)}")
-    # The driver window first, the other queries after it in module
-    # order: dict insertion order is what the driver's check consumes.
+    # The correctness window first, the other queries after it in module
+    # order: a correctness pass reads the dict in insertion order.
     window = driver_window(queries, oracles, RECORDS, CHANGED)
     ordered = {name: queries[name] for name in window}
     ordered.update(

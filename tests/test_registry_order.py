@@ -1,6 +1,6 @@
-"""The driver checks only the first ``registry.WINDOW`` ``queries()``
-entries (insertion order).  The window is chosen by a rule over the
-driver's own records (``registry.driver_window``): these tests pin the
+"""A correctness pass checks only the first ``registry.WINDOW``
+``queries()`` entries (insertion order).  The window is chosen by a rule
+over the correctness records (``registry.driver_window``): these tests pin the
 rule on fake records and its invariants on the real ones."""
 
 from __future__ import annotations
