@@ -22,6 +22,25 @@ import os
 import sys
 import time
 
+#: load gate at the driver boundary (round 13: the r12 driver artifact
+#: was captured at load 7→12 and its rows are ~2.5× quiet values).  The
+#: driver must ALWAYS get a capture, so instead of refusing, wait — up
+#: to GATE_WAIT_SEC in 30 s polls — for the 1-min load to drop under
+#: GATE_LOAD, then proceed either way and record the gate's outcome.
+GATE_LOAD = 2.0
+GATE_WAIT_SEC = 600
+#: drift-triggered redo (round 14: the r13 driver artifact shipped at
+#: drift 1.266 because load rose AFTER the load gate passed): above this
+#: control drift, wait for quiet again and fold in another min-pass, at
+#: most DRIFT_REDO_PASSES times
+DRIFT_REDO = 1.15
+DRIFT_REDO_PASSES = 2
+#: best-of-N per query: the shared host shows bursty external load
+#: (BASELINE.md noise caveat — identical binaries measured 25-55 s
+#: totals); the minimum of two back-to-back runs is the engine's
+#: capability, largely insulated from one neighbor burst
+RUNS_PER_QUERY = 2
+
 # headline set: one per operator family, weighted toward the scale-relevant
 # ops (joins, windows, dedup, similarity, facade)
 HEADLINE = [
@@ -159,6 +178,21 @@ HEADLINE = [
 ]
 
 
+def _wait_for_quiet() -> int:
+    """Poll every 30 s while the 1-min load exceeds ``GATE_LOAD``, for at
+    most ``GATE_WAIT_SEC``; return the seconds waited."""
+    waited = 0
+    while os.getloadavg()[0] > GATE_LOAD and waited < GATE_WAIT_SEC:
+        print(
+            f"load gate: 1-min load {os.getloadavg()[0]:.2f} > {GATE_LOAD}"
+            f" — waiting ({waited}s/{GATE_WAIT_SEC}s)",
+            file=sys.stderr,
+        )
+        time.sleep(30)
+        waited += 30
+    return waited
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import re
@@ -184,30 +218,12 @@ def main() -> int:
             file=sys.stderr,
         )
         return 3
-    # Default load GATE at the driver boundary (round-13, verdict item:
-    # the r12 driver artifact was captured at load 7→12 and its rows are
-    # ~2.5× quiet values).  The driver must ALWAYS get a capture, so
-    # instead of refusing, wait — up to SPARK_GRAFT_GATE_WAIT_SEC
-    # (default 600 s) in 30 s polls — for the 1-min load to drop under
-    # SPARK_GRAFT_GATE_LOAD (default 2.0); then proceed either way and
-    # record the gate's outcome in the artifact so a loaded capture is
-    # self-documenting.
-    gate_load = float(os.environ.get("SPARK_GRAFT_GATE_LOAD", "2.0"))
-    gate_wait = float(os.environ.get("SPARK_GRAFT_GATE_WAIT_SEC", "600"))
-    waited = 0.0
-    while os.getloadavg()[0] > gate_load and waited < gate_wait:
-        print(
-            f"load gate: 1-min load {os.getloadavg()[0]:.2f} > {gate_load}"
-            f" — waiting ({int(waited)}s/{int(gate_wait)}s)",
-            file=sys.stderr,
-        )
-        time.sleep(30)
-        waited += 30
+    waited = _wait_for_quiet()
     load_start = round(os.getloadavg()[0], 2)
     load_gate = {
-        "threshold": gate_load,
-        "waited_sec": int(waited),
-        "satisfied": load_start <= gate_load,
+        "threshold": GATE_LOAD,
+        "waited_sec": waited,
+        "satisfied": load_start <= GATE_LOAD,
     }
 
     spark = get_spark("bench")
@@ -225,11 +241,6 @@ def main() -> int:
         "overwrite"
     ).save()
 
-    # best-of-N per query: the shared host shows bursty external load
-    # (BASELINE.md noise caveat — identical binaries measured 25-55 s
-    # totals); the minimum of two back-to-back runs is the engine's
-    # capability, largely insulated from one neighbor burst.
-    runs_per_query = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     # optional comma-separated subset for targeted quiet-host re-measures
     # (e.g. SPARK_GRAFT_BENCH_QUERIES=dedup_minhash_lsh,dedup_ngram_jaccard);
     # unset → the full headline set the driver records
@@ -240,12 +251,12 @@ def main() -> int:
         print(f"unknown bench queries: {unknown}", file=sys.stderr)
         return 2
     def one_pass(timings: dict[str, float]) -> None:
-        """Run every subset query ``runs_per_query`` times, folding the
+        """Run every subset query ``RUNS_PER_QUERY`` times, folding the
         minimum into ``timings`` (idempotent across passes)."""
         for name in subset:
             fn = registry.QUERIES[name]
             best = timings.get(name, float("inf"))
-            for _ in range(runs_per_query):
+            for _ in range(RUNS_PER_QUERY):
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
@@ -270,31 +281,21 @@ def main() -> int:
     timings: dict[str, float] = {}
     one_pass(timings)
     control_drift = drift_of(timings)
-    # drift-triggered redo (round-14, verdict item 7: the r13 driver
-    # artifact shipped at drift 1.266 because load rose AFTER the load
-    # gate passed).  If the capture's control drift exceeds
-    # SPARK_GRAFT_DRIFT_REDO (default 1.15), wait for quiet again and
-    # fold in another full min-pass — a later-in-time pass de-correlates
-    # from the burst that inflated the first.  Bounded passes; the
-    # artifact records how many ran and the drift after each.
-    drift_gate = float(os.environ.get("SPARK_GRAFT_DRIFT_REDO", "1.15"))
-    max_redo = int(os.environ.get("SPARK_GRAFT_DRIFT_REDO_PASSES", "2"))
+    # a later-in-time pass de-correlates from the burst that inflated
+    # the first; the artifact records how many ran and the drift after each
     drift_history = [control_drift]
     redo_passes = 0
     while (
         control_drift is not None
-        and control_drift > drift_gate
-        and redo_passes < max_redo
+        and control_drift > DRIFT_REDO
+        and redo_passes < DRIFT_REDO_PASSES
     ):
         print(
-            f"control drift {control_drift} > {drift_gate} — redo pass"
-            f" {redo_passes + 1}/{max_redo}",
+            f"control drift {control_drift} > {DRIFT_REDO} — redo pass"
+            f" {redo_passes + 1}/{DRIFT_REDO_PASSES}",
             file=sys.stderr,
         )
-        waited = 0.0
-        while os.getloadavg()[0] > gate_load and waited < gate_wait:
-            time.sleep(30)
-            waited += 30
+        _wait_for_quiet()
         one_pass(timings)
         control_drift = drift_of(timings)
         drift_history.append(control_drift)
@@ -309,7 +310,7 @@ def main() -> int:
         "sf": sf,
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         "parallelism": spark.sparkContext.defaultParallelism,
-        "runs_per_query": runs_per_query,
+        "runs_per_query": RUNS_PER_QUERY,
         "strategy": "min",
         "load_1m_start": load_start,
         "load_1m_end": round(os.getloadavg()[0], 2),
@@ -318,7 +319,7 @@ def main() -> int:
         "control_quiet_ref_sec": 0.70,
         "control_drift": control_drift,
         "drift_redo": {
-            "threshold": drift_gate,
+            "threshold": DRIFT_REDO,
             "passes": redo_passes,
             "history": drift_history,
         },

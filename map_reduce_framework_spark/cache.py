@@ -30,9 +30,12 @@ staging list per SparkSession and lock mutation.
 
 from __future__ import annotations
 
+import logging
 import weakref
 
 from pyspark.sql import DataFrame
+
+logger = logging.getLogger("map_reduce_framework_spark.cache")
 
 _TRACKED: list[DataFrame] = []
 
@@ -50,8 +53,9 @@ def _unpersist_all(dfs: list[DataFrame]) -> int:
             df.unpersist()
             n += 1
         except Exception:
-            # session already stopped — nothing left to release
-            pass
+            # most often the session already stopped — nothing left to
+            # release; logged so any other cause is not lost
+            logger.debug("unpersist failed; not counted", exc_info=True)
     return n
 
 

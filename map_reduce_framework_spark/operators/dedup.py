@@ -128,8 +128,8 @@ def adaptive_sign_bits(
 #: FIXED literal table, not a runtime float computation, so the DuckDB
 #: oracle replays it as a CASE expression with zero float-parity risk.
 #: Predicted recall at the design point stays >= 0.95 at every r (and
-#: >= 0.998 at cosine 0.9); the measured curve is recorded by
-#: ``scripts/embdedup_recall_probe.py`` in BASELINE.md.  R grows like
+#: >= 0.998 at cosine 0.9); the measured curve is recorded in BASELINE.md,
+#: "Round-8: embedding-dedup recall measured directly".  R grows like
 #: (n/target)^0.33 — the classic LSH n^rho cost, total work ~ n^1.33:
 #: sub-quadratic at any corpus, vs the round-7 single-code Hamming-1
 #: scheme whose recall decayed EXPONENTIALLY in r (measured 0.09%
@@ -2272,8 +2272,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0.35): pairs below the design point are returned best-effort —
     any that collide are exact-verified and never false-positive, but
     collision probability decays below 0.8 (measured at sf1:
-    0.9997 in [0.8, 1], 0.39 in [0.35, 0.5) —
-    ``scripts/embdedup_recall_probe.py``, BASELINE.md round-8 section).
+    0.9997 in [0.8, 1], 0.39 in [0.35, 0.5) — BASELINE.md, "Round-8:
+    embedding-dedup recall measured directly").
     That asymmetry is the intended dedup contract: true duplicates are
     high-cosine, and sizing R for ≥ 0.95 at 0.35 (p* = 0.614) would
     cost ~50× more bands at r = 8.  A different design point is a
@@ -2284,8 +2284,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     **Banding, not multiprobe** (the round-8 fix): round 7 blocked on a
     single ``adaptive_sign_bits(n)``-bit code with Hamming-1 ghost
-    probing.  Direct measurement (``scripts/embdedup_recall_probe.py``)
-    showed that scheme's recall COLLAPSES as the corpus grows — P(pair
+    probing.  Direct measurement (same BASELINE.md section) showed
+    that scheme's recall COLLAPSES as the corpus grows — P(pair
     lands within Hamming 1) decays exponentially in the bit count, so
     the corpus-bounded-blocks property was bought with recall → 0
     (measured 0.09% in the borderline band at sf1, 36% overall at

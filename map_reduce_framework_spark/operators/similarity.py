@@ -116,24 +116,26 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sign_bucket_col(vec_col: str, bits: int = LSH_SIGN_BITS):
-    """Sign-bit LSH bucket id: bit j set iff vec[j] >= 0 (axis-aligned
-    hyperplanes — deterministic, engine-portable)."""
+def sign_bucket_col(vec_col: str):
+    """Sign-bit LSH bucket id over the first ``LSH_SIGN_BITS`` dims: bit j
+    set iff vec[j] >= 0 (axis-aligned hyperplanes — deterministic,
+    engine-portable)."""
     terms = " + ".join(
         f"(CASE WHEN {vec_col}[{j}] >= 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(bits)
+        for j in range(LSH_SIGN_BITS)
     )
     return F.expr(f"({terms})").cast("int")
 
 
-def probe_buckets_col(bucket_col: str, bits: int = LSH_SIGN_BITS):
+def probe_buckets_col(bucket_col: str):
     """Multiprobe set: the bucket itself + every bucket at Hamming
     distance 1 (one sign bit flipped).  A vector near a hyperplane lands
     on an arbitrary side; probing the 1-flip neighborhood recovers those
-    borderline misses for (bits+1)× the candidate volume — the standard
-    multiprobe-LSH recall/cost dial."""
+    borderline misses for (LSH_SIGN_BITS+1)× the candidate volume — the
+    standard multiprobe-LSH recall/cost dial."""
     probes = ", ".join(
-        [bucket_col] + [f"({bucket_col} ^ {1 << j})" for j in range(bits)]
+        [bucket_col]
+        + [f"({bucket_col} ^ {1 << j})" for j in range(LSH_SIGN_BITS)]
     )
     return F.expr(f"array({probes})")
 
@@ -142,14 +144,13 @@ def ann_lsh_bucketed(
     spark: SparkSession,
     sf_dir: str,
     multiprobe: bool = True,
-    bits: int = LSH_SIGN_BITS,
 ) -> DataFrame:
     """Approximate top-k: search the query's sign-bit LSH bucket plus
     (with ``multiprobe``, the default) all Hamming-1 neighbor buckets.
 
     The bucket equi-join replaces the brute-force cross product; each
-    query probes 1 + LSH_SIGN_BITS buckets of ~corpus/2^bits vectors, so
-    the scanned fraction stays (bits+1)/2^bits ≈ 3.5% of the corpus.
+    query probes 1 + LSH_SIGN_BITS buckets of ~corpus/2^LSH_SIGN_BITS
+    vectors, so the scanned fraction stays 9/256 ≈ 3.5% of the corpus.
     Every corpus vector lives in exactly one bucket and the probe set is
     distinct, so no pair is generated twice (no dedup step needed).  The
     ``bucket`` output column is the *candidate's* bucket (= the probe
@@ -164,11 +165,11 @@ def ann_lsh_bucketed(
     the floor and that multiprobe dominates single-probe.
     """
     corpus, queries = _corpus_and_queries(spark, sf_dir)
-    corpus_b = corpus.withColumn("cbucket", sign_bucket_col("vc", bits))
-    queries_b = queries.withColumn("bucket", sign_bucket_col("vq", bits))
+    corpus_b = corpus.withColumn("cbucket", sign_bucket_col("vc"))
+    queries_b = queries.withColumn("bucket", sign_bucket_col("vq"))
     if multiprobe:
         queries_b = queries_b.withColumn(
-            "probe", F.explode(probe_buckets_col("bucket", bits))
+            "probe", F.explode(probe_buckets_col("bucket"))
         )
     else:
         queries_b = queries_b.withColumn("probe", F.col("bucket"))
@@ -188,15 +189,13 @@ def ann_lsh_bucketed(
     )
 
 
-def ann_ivf(
-    spark: SparkSession, sf_dir: str, n_probe: int = N_PROBE
-) -> DataFrame:
+def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) ANN: corpus vectors assigned to their nearest
     centroid cell; each query probes only its ``N_PROBE`` closest cells.
 
     This is the production scale path for embedding search: the cell id
     is a partitioning key, so at 100 TB each query's work is a pruned
-    equi-join against ~n_probe/n_cells of the corpus instead of a full
+    equi-join against ~N_PROBE/N_CENTROIDS of the corpus instead of a full
     scan, and cells can be bucketed/sorted on disk.  Assignment and
     probing rank by 6-dp-rounded dot with centroid-id tie-break, so cell
     membership is deterministic and the DuckDB oracle reproduces it
@@ -208,7 +207,7 @@ def ann_ivf(
         F.col("vec_id").alias("cent_id"),
         unit_vector_col("embedding").alias("vcent"),
     )
-    return _ivf_search(centroids, corpus, queries, n_probe=n_probe)
+    return _ivf_search(centroids, corpus, queries)
 
 
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -331,15 +330,12 @@ def _ivf_rank(probe_cells: DataFrame, corpus_cells: DataFrame) -> DataFrame:
 
 
 def _ivf_search(
-    centroids: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    n_probe: int = N_PROBE,
+    centroids: DataFrame, corpus: DataFrame, queries: DataFrame
 ) -> DataFrame:
-    """Shared IVF search: assign cells, probe ``n_probe`` cells/query."""
+    """Shared IVF search: assign cells, probe ``N_PROBE`` cells/query."""
     corpus_cells = _assign_cells(centroids, corpus, "cand_id", "vc", 1)
     probe_cells = _assign_cells(
-        centroids, queries, "query_id", "vq", n_probe
+        centroids, queries, "query_id", "vq", N_PROBE
     ).withColumnRenamed("cell", "qcell")
     return _ivf_rank(probe_cells, corpus_cells)
 
@@ -354,12 +350,12 @@ _UNIT_V_SQL = (
 )
 
 
-def _sign_bucket_sql(vec: str, bits: int = LSH_SIGN_BITS) -> str:
+def _sign_bucket_sql(vec: str) -> str:
     return (
         "("
         + " + ".join(
             f"(CASE WHEN {vec}[{j + 1}] >= 0 THEN {1 << j} ELSE 0 END)"
-            for j in range(bits)
+            for j in range(LSH_SIGN_BITS)
         )
         + ")"
     )

@@ -1410,10 +1410,6 @@ BPE_ROUNDS_MAX = 16
 BPE_CAND_POOL = 64
 BPE_SEP = "\x1f"
 
-#: rounds the most recent _bpe_train run took — test instrumentation
-#: for the jobs-per-merge bound (1 driver collect per round)
-_LAST_TRAIN_ROUNDS = 0
-
 
 def _bpe_apply_batch(rules: "list[tuple[str, str]]") -> "F.Column":
     """Greedy left-to-right application of a SYMBOL-DISJOINT merge batch
@@ -1483,7 +1479,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     complements :func:`bpe_pair_stats`, which reports only the
     first-round pair frequencies.
     """
-    merges, _ = _bpe_train(spark, sf_dir)
+    merges, _, _ = _bpe_train(spark, sf_dir)
     return spark.createDataFrame(
         merges,
         "rank int, pair_a string, pair_b string, merged string,"
@@ -1492,13 +1488,12 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_train(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint_every: int | None = None,
-) -> "tuple[list[tuple[int, str, str, str, int]], DataFrame]":
-    """Shared BPE training loop: returns the merge trajectory AND the
+    spark: SparkSession, sf_dir: str
+) -> "tuple[list[tuple[int, str, str, str, int]], DataFrame, int]":
+    """Shared BPE training loop: returns the merge trajectory, the
     fully re-segmented (term, tc, syms) vocabulary after training
-    (consumed by :func:`bpe_segment_docs`).
+    (consumed by :func:`bpe_segment_docs`) and the number of rounds it
+    took (one driver collect per round; the tests bound it).
 
     Cache protocol: each round's vocab is ``cache.persist_tracked`` —
     materialized for free inside the round's collect job (one job per
@@ -1509,17 +1504,13 @@ def _bpe_train(
     zero persistent RDDs after the caller drops the result).  Rounds
     execute from the previous round's cache, never from a re-folded
     corpus scan; the logical plans still nest one fold per round, which
-    is fine at the registered depth (8 rounds) — a production 32k-merge
-    run truncates lineage with ``checkpoint_every``: every N rounds the
-    vocab is reliably checkpointed (``DataFrame.checkpoint``, eager), so
-    plan depth is bounded by N folds regardless of merge count (measured
-    at 1k+ merges by ``scripts/bpe_scale_probe.py`` — without it the
-    analyzer cost grows superlinearly in rounds).  ``None`` (the
-    registered default) keeps the 8-round plan checkpoint-free.
+    is fine at the registered depth (8 rounds).  At production merge
+    counts the analyzer cost grows with the fold depth, so such a run
+    needs lineage truncation (BASELINE.md, "Production-vocab BPE point,
+    round 9", measured 1k+ merges with a reliable checkpoint every 16
+    rounds).
     """
     from .. import cache
-
-    global _LAST_TRAIN_ROUNDS
 
     scan = load_table(spark, sf_dir, "documents")
     docs = fan_out(scan)
@@ -1610,11 +1601,6 @@ def _bpe_train(
             "tc",
             _bpe_apply_batch([(a, b) for a, b, _ in sel]).alias("syms"),
         )
-        if checkpoint_every and rounds % checkpoint_every == 0:
-            # reliable (disk) checkpoint: cuts the nested-fold lineage so
-            # plan depth stays <= checkpoint_every folds at any merge
-            # count; eager, so it doubles as the round's materialization
-            folded = folded.checkpoint(eager=True)
         cur = cache.persist_tracked(folded)
     if prev is not None:
         # the loop exits with the LAST round's predecessor still cached
@@ -1626,14 +1612,13 @@ def _bpe_train(
         # result to adopt.
         cur.count()
         prev.unpersist()
-    _LAST_TRAIN_ROUNDS = rounds
     if len(merges) < BPE_MERGES:
         raise ValueError(
             f"BPE training exhausted pairs after {rounds} rounds with "
             f"{len(merges)} merges — corpus has fewer than {BPE_MERGES} "
             f"learnable merges"
         )
-    return merges, cur
+    return merges, cur, rounds
 
 
 def bpe_segment_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1656,7 +1641,7 @@ def bpe_segment_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     document join (exact-integer token counts; ratio rounded via the
     shared rnd/rnd_sql).
     """
-    _, final_vocab = _bpe_train(spark, sf_dir)
+    _, final_vocab, _ = _bpe_train(spark, sf_dir)
     tok = final_vocab.select(
         "term",
         F.size(F.split(F.col("syms"), BPE_SEP)).alias("n_tok"),
@@ -1704,7 +1689,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     No counterpart in the reference (SURVEY §2.4 extension; the
     training-data-pipeline governance family).
     """
-    _, final_vocab = _bpe_train(spark, sf_dir)
+    _, final_vocab, _ = _bpe_train(spark, sf_dir)
     tok = final_vocab.select(
         "term",
         F.size(F.split(F.col("syms"), BPE_SEP)).alias("n_tok"),

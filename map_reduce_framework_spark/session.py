@@ -22,22 +22,15 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(
-    app_name: str = "map_reduce_framework_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "map_reduce_framework_spark") -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults: both
     the ``local`` core count and the default shuffle partitions come from
     ``$SPARK_GRAFT_CPUS`` (32 when unset)."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or cpus),
-        )
+        .master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

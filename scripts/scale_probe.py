@@ -10,7 +10,10 @@ the scale-safety mechanisms actually engaged:
   stays ~linear rather than quadratic as df saturates.
 
 Usage: python scripts/scale_probe.py [sf1_dir]
-Prints one JSON line per query plus a summary line.
+Prints one JSON line per query plus a summary line.  The session is the
+engine's own (``session.get_spark``); at sf1 give it room and a separate
+warehouse with ``SPARK_GRAFT_DRIVER_MEM=48g
+SPARK_GRAFT_WAREHOUSE=/tmp/mrfs_warehouse_probe``.
 """
 
 from __future__ import annotations
@@ -69,26 +72,15 @@ PROBE_QUERIES = [
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from map_reduce_framework_spark import cache
     from map_reduce_framework_spark.operators import dedup
     from map_reduce_framework_spark.plans.registry import QUERIES
+    from map_reduce_framework_spark.session import get_spark
     from map_reduce_framework_spark.sources import load_table
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("mrfs-scale-probe")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.warehouse.dir", "/tmp/mrfs_warehouse_probe")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("mrfs-scale-probe")
 
     # --- does the df cap fire at this scale?
     docs = dedup.fan_out(load_table(spark, SF1, "documents"))

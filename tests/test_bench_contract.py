@@ -6,8 +6,12 @@ separators + a BENCH_LOCAL.json copy — pin both properties)."""
 
 from __future__ import annotations
 
+import ast
 import json
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _bench_module():
@@ -71,3 +75,31 @@ def test_compact_record_fits_the_capture_window():
         f"bench stdout record is {len(line)} bytes; the driver capture "
         "clipped ~2 KB lines — trim the metadata or the slowest-5 list"
     )
+
+
+def test_scripts_build_sessions_through_get_spark():
+    """bench.py and every script take the engine's own session
+    (``session.get_spark``: UTC, Arrow, AQE, core count); only
+    ``driver_sim.py`` builds a vanilla one on purpose, to match the
+    external driver."""
+    import glob
+
+    paths = [os.path.join(ROOT, "bench.py")] + sorted(
+        glob.glob(os.path.join(ROOT, "scripts", "*.py"))
+    )
+    allowed = os.path.join(ROOT, "scripts", "driver_sim.py")
+    offenders = []
+    for path in paths:
+        if path == allowed:
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "builder"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "SparkSession"
+            ):
+                offenders.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+    assert not offenders, f"SparkSession.builder outside get_spark: {offenders}"

@@ -97,13 +97,14 @@ def _params():
 
 
 def test_bpe_merges_match_pure_python_reference(spark):
+    from map_reduce_framework_spark import cache
     from map_reduce_framework_spark.operators import text
 
     n_merges, batch, rounds_max, pool = _params()
-    got = [
-        (r["rank"], r["pair_a"], r["pair_b"], r["merged"], r["pair_count"])
-        for r in text.bpe_train_merges(spark, SF_DIR).collect()
-    ]
+    try:
+        got, _, rounds = text._bpe_train(spark, SF_DIR)
+    finally:
+        cache.release()
     want, _, ref_rounds, _ = _reference_bpe(
         _corpus_words(), n_merges, batch, rounds_max, pool
     )
@@ -113,8 +114,8 @@ def test_bpe_merges_match_pure_python_reference(spark):
     assert len({(a, b) for _, a, b, _, _ in got}) == n_merges
     # the batching claim: one driver collect (= one scheduled job) per
     # round, and rounds <= merges/4
-    assert text._LAST_TRAIN_ROUNDS == ref_rounds
-    assert text._LAST_TRAIN_ROUNDS <= n_merges // 4
+    assert rounds == ref_rounds
+    assert rounds <= n_merges // 4
 
 
 def test_bpe_round_selection_is_symbol_disjoint(spark):

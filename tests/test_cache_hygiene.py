@@ -101,3 +101,22 @@ def test_failed_query_does_not_leak_staged_persists_to_next(spark):
     # nothing staged for the NEXT query to adopt, nothing left persisted
     assert cache._TRACKED == []
     assert _n_persistent(spark) == 0, "failed query leaked its persist"
+
+
+def test_failed_unpersist_is_logged_and_not_counted(caplog):
+    """An unpersist that raises (e.g. on a stopped session) is left out
+    of the count and logged at debug level with its traceback."""
+
+    class _Stopped:
+        def unpersist(self):
+            raise RuntimeError("session stopped")
+
+    class _Live:
+        def unpersist(self):
+            pass
+
+    with caplog.at_level("DEBUG", logger="map_reduce_framework_spark.cache"):
+        assert cache._unpersist_all([_Stopped(), _Live()]) == 1
+    (rec,) = caplog.records
+    assert rec.levelname == "DEBUG"
+    assert "session stopped" in str(rec.exc_info[1])
