@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -35,6 +36,13 @@ GATE_WAIT_SEC = 600
 #: most DRIFT_REDO_PASSES times
 DRIFT_REDO = 1.15
 DRIFT_REDO_PASSES = 2
+#: the control query and its quiet-host calibration: pricing_summary is
+#: untouched since round 1 and ran in 0.70 s at sf0.1 on 32 cores
+#: (BASELINE.md round-11)
+CONTROL_QUERY = "pricing_summary"
+CONTROL_REF_SEC = 0.70
+CONTROL_REF_SF = 0.1
+CONTROL_REF_PARALLELISM = 32
 #: best-of-N per query: the shared host shows bursty external load
 #: (BASELINE.md noise caveat — identical binaries measured 25-55 s
 #: totals); the minimum of two back-to-back runs is the engine's
@@ -193,12 +201,33 @@ def _wait_for_quiet() -> int:
     return waited
 
 
+def sf_of(sf_dir: str) -> float:
+    """The scale factor named by an SF directory (``.../sf0.1`` → 0.1,
+    ``/tmp/mrfs_sf1`` → 1.0), or -1.0 when its name holds none."""
+    m = re.search(r"sf([0-9.]+)", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1).rstrip(".")) if m else -1.0
+
+
+def drift_of(
+    timings: dict[str, float], sf: float, parallelism: int
+) -> float | None:
+    """Host-day drift of this capture: the control query's time over its
+    calibration, so cross-round comparisons can normalize without a
+    separate calibration run.  None when the capture did not run the
+    control query, or ran at another SF or core count than the
+    calibration, where the ratio measures the setting, not the host."""
+    if (
+        CONTROL_QUERY not in timings
+        or sf != CONTROL_REF_SF
+        or parallelism != CONTROL_REF_PARALLELISM
+    ):
+        return None
+    return round(timings[CONTROL_QUERY] / CONTROL_REF_SEC, 3)
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    import re
-
-    m = re.search(r"sf([0-9.]+)", os.path.basename(sf_dir.rstrip("/")))
-    sf = float(m.group(1).rstrip(".")) if m else -1.0
+    sf = sf_of(sf_dir)
 
     from map_reduce_framework_spark import cache
     from map_reduce_framework_spark.plans import registry
@@ -268,19 +297,10 @@ def main() -> int:
             # per-query progress to STDERR so stdout stays minimal
             print(f"bench {name}: {timings[name]}s", file=sys.stderr)
 
-    def drift_of(timings: dict[str, float]) -> float | None:
-        # control-query drift factor (round-13): pricing_summary is
-        # untouched since round 1; its quiet-host record is 0.70 s
-        # (BASELINE.md round-11 calibration).  timings/0.70 quantifies
-        # host-day drift for THIS capture, so cross-round comparisons
-        # can normalize without a separate calibration run.
-        if "pricing_summary" not in timings:
-            return None
-        return round(timings["pricing_summary"] / 0.70, 3)
-
+    parallelism = spark.sparkContext.defaultParallelism
     timings: dict[str, float] = {}
     one_pass(timings)
-    control_drift = drift_of(timings)
+    control_drift = drift_of(timings, sf, parallelism)
     # a later-in-time pass de-correlates from the burst that inflated
     # the first; the artifact records how many ran and the drift after each
     drift_history = [control_drift]
@@ -297,7 +317,7 @@ def main() -> int:
         )
         _wait_for_quiet()
         one_pass(timings)
-        control_drift = drift_of(timings)
+        control_drift = drift_of(timings, sf, parallelism)
         drift_history.append(control_drift)
         redo_passes += 1
 
@@ -309,14 +329,14 @@ def main() -> int:
         "queries": timings,
         "sf": sf,
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-        "parallelism": spark.sparkContext.defaultParallelism,
+        "parallelism": parallelism,
         "runs_per_query": RUNS_PER_QUERY,
         "strategy": "min",
         "load_1m_start": load_start,
         "load_1m_end": round(os.getloadavg()[0], 2),
         "load_gate": load_gate,
-        "control_query": "pricing_summary",
-        "control_quiet_ref_sec": 0.70,
+        "control_query": CONTROL_QUERY,
+        "control_quiet_ref_sec": CONTROL_REF_SEC,
         "control_drift": control_drift,
         "drift_redo": {
             "threshold": DRIFT_REDO,

@@ -3,7 +3,23 @@
 Near-dup pair generation (dedup.py) emits EDGES; a training-data pipeline
 then needs the transitive closure — "docs A,B and B,C are near-dups ⇒
 A,B,C are one cluster, keep one canonical doc".  That closure is weakly
-connected components, computed here with min-label propagation:
+connected components with min-id labels.
+
+Small graphs run on the driver.  The iterative operators here (connected
+components, the k-core peel, triangle counts) pay a fixed price in Spark
+jobs per sweep, whatever the graph's size: under AQE one CC sweep is 7
+jobs at its lazy checkpoint plus 2 for the convergence scalar.  So each
+one first collects its edge list up to :data:`LOCAL_MAX_EDGES` + 1 rows
+(:func:`_collect_if_small`).  At or under the cap it computes with numpy
+on the driver and returns the result through ``createDataFrame``'s Arrow
+path — the "local execution" of Tenzing (PAPERS.md), where an input
+under a size threshold runs in the client instead of launching jobs.
+Above the cap it runs the distributed code below, and the probe's jobs
+are wasted (they compute the edge list once more).  The cap is set from
+the local-vs-distributed crossover recorded in SCALING.md; the choice
+depends only on the edge count.
+
+The distributed CC is min-label propagation:
 
     label(v) ← min(label(v), min over neighbors' label)   until fixpoint
 
@@ -24,14 +40,101 @@ iterative operator is exactly DuckDB-checkable.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import rnd, rnd_sql
 from . import dedup
 
 #: safety bound; near-dup cluster diameter is far smaller in practice
 MAX_CC_ITERATIONS = 25
+
+#: edge lists of at most this many edges are computed on the driver.
+#: Set from the local-vs-distributed crossover in SCALING.md; sf1's
+#: 19.3M simhash pairs stay distributed.
+LOCAL_MAX_EDGES = 4_000_000
+
+
+def _collect_if_small(edges: DataFrame) -> pa.Table | None:
+    """``edges`` as an Arrow table when it has at most
+    :data:`LOCAL_MAX_EDGES` rows, else None (run distributed)."""
+    t = edges.limit(LOCAL_MAX_EDGES + 1).toArrow()
+    return None if t.num_rows > LOCAL_MAX_EDGES else t
+
+
+def _vertex_type(edges: DataFrame):
+    """Spark type of the vertex ids: the two endpoint columns widened
+    the way the distributed paths' symmetric union widens them (plan
+    analysis only, no job)."""
+    a, b = edges.columns
+    return edges.union(edges.select(b, a)).schema[0].dataType
+
+
+def _dense(t: pa.Table) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(ids, u, v)``: the sorted distinct non-null endpoint ids and each
+    edge's endpoints as indexes into them.  A null endpoint maps to
+    ``len(ids)``: like the distributed paths' equi-joins, it is a vertex
+    that no edge reaches."""
+    cols = [t.column(0), t.column(1)]
+    ids = np.unique(np.concatenate([c.drop_null().to_numpy() for c in cols]))
+    out = []
+    for c in cols:
+        idx = np.full(len(c), len(ids), dtype=np.int64)
+        valid = c.is_valid().to_numpy()
+        idx[valid] = np.searchsorted(ids, c.drop_null().to_numpy())
+        out.append(idx)
+    return ids, out[0], out[1]
+
+
+def _local_result(
+    pairs: DataFrame,
+    t: pa.Table,
+    ids: dict[str, np.ndarray],
+    counts: dict[str, np.ndarray],
+) -> DataFrame:
+    """A driver-side result as a Spark frame, built through Arrow: one
+    row per vertex, plus the null vertex's row when ``t`` has a null
+    endpoint.  ``ids`` columns (one entry per vertex of :func:`_dense`)
+    take the vertex type and are null in the null vertex's row;
+    ``counts`` columns (index ``len(ids)`` = the null vertex) are
+    non-null bigints, or booleans for a bool array."""
+    with_null = t.column(0).null_count + t.column(1).null_count > 0
+    typ = _vertex_type(pairs)
+    n = len(next(iter(ids.values())))
+    cols, fields = {}, []
+    for name, arr in ids.items():
+        col = pa.array(arr)
+        if with_null:
+            col = pa.concat_arrays([col, pa.nulls(1, col.type)])
+        cols[name] = col
+        fields.append(T.StructField(name, typ))
+    for name, arr in counts.items():
+        cols[name] = arr[: n + with_null]
+        kind = T.BooleanType() if arr.dtype == bool else T.LongType()
+        fields.append(T.StructField(name, kind, False))
+    return pairs.sparkSession.createDataFrame(pa.table(cols), T.StructType(fields))
+
+
+def _min_labels(n: int, u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Component label of vertices ``0..n-1`` (= the smallest vertex in
+    the component) over edges ``u[i]—v[i]``: roots hook onto the smaller
+    root across every edge, then pointer jumping flattens the forest,
+    until no root moves.  Exact, whatever the number of rounds."""
+    lab = np.arange(n)
+    while True:
+        ru, rv = lab[u], lab[v]
+        lo = np.minimum(ru, rv)
+        new = lab.copy()
+        np.minimum.at(new, ru, lo)
+        np.minimum.at(new, rv, lo)
+        while not np.array_equal(new[new], new):
+            new = new[new]
+        if np.array_equal(new, lab):
+            return lab
+        lab = new
 
 
 def connected_components(
@@ -41,10 +144,29 @@ def connected_components(
 
     Returns ``(id, label)`` where label = min vertex id in the component.
     Only vertices with at least one edge appear (isolated docs need no
-    cluster resolution).  The edge list is persisted once; each sweep
-    shuffles (id, label) pairs only — at 100 TB scale the per-iteration
-    payload is two longs per edge, and AQE handles the skew of giant
-    components.
+    cluster resolution).  A null endpoint is its own ``(null, null)``
+    row and joins nothing.  At most :data:`LOCAL_MAX_EDGES` edges:
+    computed on the driver (:func:`_min_labels`); above it:
+    :func:`_connected_components_distributed`.
+    """
+    pairs = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    t = _collect_if_small(pairs)
+    if t is None:
+        return _connected_components_distributed(edges, src, dst)
+    ids, u, v = _dense(t)
+    keep = (u < len(ids)) & (v < len(ids))
+    labels = ids[_min_labels(len(ids), u[keep], v[keep])]
+    return _local_result(pairs, t, {"id": ids, "label": labels}, {})
+
+
+def _connected_components_distributed(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """:func:`connected_components` as label propagation in Spark.
+
+    The edge list is persisted once; each sweep shuffles (id, label)
+    pairs only — at 100 TB scale the per-iteration payload is two longs
+    per edge, and AQE handles the skew of giant components.
     """
     # localCheckpoint both materializes the iteration inputs and
     # TRUNCATES LINEAGE — without it each round's plan embeds all prior
@@ -346,8 +468,90 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the self-join fan-in bounded on template-heavy corpora at
     100 TB.  Membership explodes 3 rows per triangle into a
     partial-aggregated count per node; clustering = 2T / deg(deg-1).
+
+    At most :data:`LOCAL_MAX_EDGES` pairs, the same forward-adjacency
+    intersection runs on the driver (:func:`_triangle_counts`) and only
+    ``clustering`` is computed in Spark, by the same expression.
     """
     pairs = dedup.simhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    return triangle_stats_from_pairs(pairs)
+
+
+#: wedges probed per vectorized step of :func:`_triangle_counts` (bounds
+#: its scratch arrays to a few tens of MB)
+_WEDGE_CHUNK = 1 << 21
+
+
+def _triangle_counts(
+    n: int, u: np.ndarray, v: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(degree, n_triangles)`` of vertices ``0..n`` over the distinct
+    edges ``u[i]—v[i]``, index ``n`` being the null endpoint (a degree,
+    no triangles).  Edges are oriented as in :func:`graph_triangle_stats`,
+    and each forward edge ``a→b`` intersects ``fwd(b)`` with ``fwd(a)``
+    by probing every ``c ∈ fwd(b)`` for the edge ``a→c``: each triangle
+    is found once, at its lowest-ranked vertex, and counted for all
+    three.  The probes run as numpy arrays, ``_WEDGE_CHUNK`` at a time."""
+    deg = np.bincount(np.concatenate([u, v]), minlength=n + 1)
+    tri = np.zeros(n + 1, dtype=np.int64)
+    keep = (u < n) & (v < n)
+    u, v = u[keep], v[keep]
+    fwd = deg[u] <= deg[v]
+    key = np.sort(np.where(fwd, u, v) * n + np.where(fwd, v, u))
+    a, b = key // n, key % n
+    start = np.searchsorted(a, np.arange(n + 1))
+    probes = start[b + 1] - start[b]  # |fwd(b)| per edge a→b
+    ends = np.cumsum(probes)
+    i = 0
+    while i < len(key):
+        j = max(i + 1, int(np.searchsorted(ends, ends[i] - probes[i] + _WEDGE_CHUNK)))
+        cnt = probes[i:j]
+        edge = np.repeat(np.arange(i, j), cnt)
+        pos = np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        c = b[start[b[edge]] + pos]
+        closing = a[edge] * n + c
+        hit = np.minimum(np.searchsorted(key, closing), len(key) - 1)
+        closed = key[hit] == closing
+        for x in (a[edge][closed], b[edge][closed], c[closed]):
+            tri += np.bincount(x, minlength=n + 1)
+        i = j
+    return deg, tri
+
+
+def _triangle_result(counts: DataFrame) -> DataFrame:
+    """The query's output over ``(doc_id, degree, n_triangles)``, a null
+    ``n_triangles`` meaning none."""
+    return counts.select(
+        "doc_id",
+        "degree",
+        F.coalesce("n_triangles", F.lit(0)).alias("n_triangles"),
+        rnd(
+            F.when(
+                F.col("degree") >= 2,
+                2.0
+                * F.coalesce("n_triangles", F.lit(0))
+                / (F.col("degree") * (F.col("degree") - 1)),
+            ).otherwise(F.lit(0.0)),
+            4,
+        ).alias("clustering"),
+    ).orderBy("doc_id")
+
+
+def triangle_stats_from_pairs(pairs: DataFrame) -> DataFrame:
+    """:func:`graph_triangle_stats` over any distinct, canonical
+    (doc_a < doc_b) pair list — exposed for hand-built-graph tests."""
+    t = _collect_if_small(pairs)
+    if t is None:
+        return _triangle_stats_distributed(pairs)
+    ids, u, v = _dense(t)
+    deg, tri = _triangle_counts(len(ids), u, v)
+    return _triangle_result(
+        _local_result(pairs, t, {"doc_id": ids}, {"degree": deg, "n_triangles": tri})
+    )
+
+
+def _triangle_stats_distributed(pairs: DataFrame) -> DataFrame:
+    """:func:`triangle_stats_from_pairs` as joins in Spark."""
     from ..cache import persist_tracked
 
     p = persist_tracked(pairs)
@@ -439,24 +643,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tri_per_node = member.groupBy(F.col("m.doc_id").alias("doc_id")).agg(
         F.sum("m.w").alias("n_triangles")
     )
-    return (
-        deg.join(tri_per_node, "doc_id", "left")
-        .select(
-            "doc_id",
-            "degree",
-            F.coalesce("n_triangles", F.lit(0)).alias("n_triangles"),
-            rnd(
-                F.when(
-                    F.col("degree") >= 2,
-                    2.0
-                    * F.coalesce("n_triangles", F.lit(0))
-                    / (F.col("degree") * (F.col("degree") - 1)),
-                ).otherwise(F.lit(0.0)),
-                4,
-            ).alias("clustering"),
-        )
-        .orderBy("doc_id")
-    )
+    return _triangle_result(deg.join(tri_per_node, "doc_id", "left"))
 
 
 def _pagerank_oracle() -> str:
@@ -762,6 +949,12 @@ def kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     after round R at the tested SFs, so the answer equals the true
     k-core, not a truncation of it.
 
+    All of the above is the distributed path, taken above
+    :data:`LOCAL_MAX_EDGES` pairs (sf1's 19.3M).  At or under it the
+    same frontier subtraction runs on the driver as numpy bincounts,
+    for exactly ``KCORE_ROUNDS`` rounds with no per-round check: an
+    empty frontier subtracts nothing.
+
     No counterpart in the reference (SURVEY §2.4 extension: graph
     family alongside CC / PageRank / triangles).
     """
@@ -773,7 +966,35 @@ def kcore_from_pairs(pairs: DataFrame) -> DataFrame:
     """The peel core of :func:`kcore_membership` over any
     (doc_a, doc_b) pair list — exposed for hand-built-graph tests.
     Frontier degree-subtraction; see :func:`kcore_membership` for the
-    measured rationale vs subgraph rewriting."""
+    measured rationale vs subgraph rewriting.  A null endpoint is a
+    vertex that no round peels or reaches, reported outside the core."""
+    pairs = pairs.select("doc_a", "doc_b")
+    t = _collect_if_small(pairs)
+    if t is None:
+        return _kcore_distributed(pairs)
+    ids, u, v = _dense(t)
+    n = len(ids)
+    src, dst = np.concatenate([u, v]), np.concatenate([v, u])
+    deg0 = np.bincount(src, minlength=n + 1)
+    d = deg0.copy()
+    alive = np.ones(n + 1, dtype=bool)
+    for _ in range(KCORE_ROUNDS):
+        frontier = alive & (d < KCORE_K)
+        frontier[n] = False
+        d -= np.bincount(src[frontier[dst]], minlength=n + 1)
+        alive &= ~frontier
+    core = np.where(alive, d, 0)
+    core[n] = 0
+    return _local_result(
+        pairs,
+        t,
+        {"doc_id": ids},
+        {"degree_initial": deg0, "degree_core": core, "in_core": core >= KCORE_K},
+    ).orderBy("doc_id")
+
+
+def _kcore_distributed(pairs: DataFrame) -> DataFrame:
+    """:func:`kcore_from_pairs` as joins in Spark."""
     # pairs materialize ONCE; sym is two projections of the checkpoint
     # (the union must not recompute the pair generation per scan).
     # Round-14: all loop checkpoints are LAZY — each is materialized by

@@ -1521,8 +1521,9 @@ def media_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     audio delta-sign) into keep/drop clusters — the canonicalization
     step that completes the multimodal dedup pipeline, exactly as
     :func:`~.graph.dedup_clusters` completes the text pipeline: edges =
-    near-dup pairs, transitive closure via min-label propagation with
-    pointer doubling (:func:`~.graph.connected_components`), canonical =
+    near-dup pairs, transitive closure via
+    :func:`~.graph.connected_components` (on the driver under its edge
+    cap, else min-label propagation with pointer doubling), canonical =
     lowest doc_id per cluster.  Image and audio doc populations are
     disjoint (doc_id mod 3), so components never mix modalities — the
     union is a convenience, not a semantic merge.

@@ -60,14 +60,15 @@ RECORDS = Path(__file__).resolve().parents[2]
 #: round, so they get a fresh correctness row now whatever their last green
 #: round.  Keep it short — it may not push out any row of the stalest
 #: round (``tests/test_registry_order.py`` checks that).  Now: the two
-#: branch-overlap composites with no correctness row since the overlap, and
-#: three graph consumers whose plans lost a discarded sort or collect.
+#: branch-overlap composites with no correctness row since the overlap,
+#: and three graph consumers that now compute on the driver under
+#: ``graph.LOCAL_MAX_EDGES`` (the k-core peel has no other window row).
 CHANGED = [
     "ccnet_buckets",
     "clean_corpus",
     "dedup_keeplist_quality",
+    "kcore_membership",
     "media_dedup_clusters",
-    "pagerank_dup_graph",
 ]
 
 

@@ -9,8 +9,10 @@ the scale-safety mechanisms actually engaged:
 - candidate-pair counts per operator, to confirm candidate generation
   stays ~linear rather than quadratic as df saturates.
 
-Usage: python scripts/scale_probe.py [sf1_dir]
-Prints one JSON line per query plus a summary line.  The session is the
+Usage: python scripts/scale_probe.py [sf_dir]
+Prints one JSON line per query plus a summary line, whose ``sf`` is read
+from the directory's name as ``bench.py`` reads it (-1.0 when the name
+holds none).  The session is the
 engine's own (``session.get_spark``); at sf1 give it room and a separate
 warehouse with ``SPARK_GRAFT_DRIVER_MEM=48g
 SPARK_GRAFT_WAREHOUSE=/tmp/mrfs_warehouse_probe``.
@@ -74,6 +76,7 @@ PROBE_QUERIES = [
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from bench import sf_of
     from map_reduce_framework_spark import cache
     from map_reduce_framework_spark.operators import dedup
     from map_reduce_framework_spark.plans.registry import QUERIES
@@ -150,11 +153,11 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "metric": "sf1_scale_probe_total",
+                "metric": "scale_probe_total",
                 "value": round(sum(results.values()), 2),
                 "unit": "sec",
                 "queries": results,
-                "sf": 1.0,
+                "sf": sf_of(SF1),
             }
         )
     )

@@ -47,6 +47,19 @@ def spark():
     yield spark
 
 
+@pytest.fixture(params=["local", "distributed"])
+def graph_path(request, monkeypatch):
+    """Run a graph test on both paths of ``operators.graph``: at the
+    default ``LOCAL_MAX_EDGES`` (every test-SF graph is under it, so
+    the driver computes) and at 0, where any non-empty edge list takes
+    the distributed path."""
+    from map_reduce_framework_spark.operators import graph
+
+    if request.param == "distributed":
+        monkeypatch.setattr(graph, "LOCAL_MAX_EDGES", 0)
+    return request.param
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -586,7 +586,7 @@ def test_kcore_matches_oracle(spark, duck):
     )
 
 
-def test_kcore_hand_graph(spark):
+def test_kcore_hand_graph(spark, graph_path):
     """Triangle {1,2,3} is a 2-core; pendant 4 (one edge to 3) and the
     chain 5—6 peel away.  Pendant removal must not drag the triangle
     out (3's degree drops 3→2 but stays ≥ k)."""
@@ -601,7 +601,29 @@ def test_kcore_hand_graph(spark):
     assert rows[4]["degree_core"] == 0 and rows[5]["degree_core"] == 0
 
 
-def test_kcore_fixpoint_reached(spark):
+def test_kcore_null_endpoint(spark, graph_path):
+    """A null endpoint is a vertex no round peels or reaches: its
+    neighbor 3 keeps the edge, and its own row sits outside the core."""
+    from map_reduce_framework_spark.operators.graph import kcore_from_pairs
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, None), (4, 5)], "doc_a long, doc_b long"
+    )
+    rows = {
+        r["doc_id"]: (r["degree_initial"], r["degree_core"], r["in_core"])
+        for r in kcore_from_pairs(pairs).collect()
+    }
+    assert rows == {
+        1: (2, 2, True),
+        2: (2, 2, True),
+        3: (3, 3, True),
+        4: (1, 0, False),
+        5: (1, 0, False),
+        None: (1, 0, False),
+    }
+
+
+def test_kcore_fixpoint_reached(spark, graph_path):
     """The bounded-round contract: the LAST peel round must remove
     nothing at the tested SF, so the R-round answer equals the true
     k-core (not a truncation).  Verified by running one extra round
@@ -625,6 +647,51 @@ def test_kcore_fixpoint_reached(spark):
     n_core = out.where("in_core").count()
     assert n_core > 0, "no 2-core at test SF - raise SF or lower k"
     assert KCORE_ROUNDS >= 2
+
+
+# --------------------------------------------------------------------------
+# graph_triangle_stats
+# --------------------------------------------------------------------------
+
+
+def test_triangle_hand_graph(spark, graph_path):
+    """K4 {1,2,3,4} holds 4 triangles, 3 per member; triangle {4,5,6}
+    hangs off 4 (degree 5, 4 triangles, clustering 2·4/(5·4) = 0.4);
+    the edge 7—8 closes nothing."""
+    from map_reduce_framework_spark.operators.graph import (
+        triangle_stats_from_pairs,
+    )
+
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    pairs = spark.createDataFrame(
+        k4 + [(4, 5), (5, 6), (4, 6), (7, 8)], "doc_a long, doc_b long"
+    )
+    rows = {
+        r["doc_id"]: (r["degree"], r["n_triangles"], r["clustering"])
+        for r in triangle_stats_from_pairs(pairs).collect()
+    }
+    assert rows == {
+        1: (3, 3, 1.0),
+        2: (3, 3, 1.0),
+        3: (3, 3, 1.0),
+        4: (5, 4, 0.4),
+        5: (2, 1, 1.0),
+        6: (2, 1, 1.0),
+        7: (1, 0, 0.0),
+        8: (1, 0, 0.0),
+    }
+
+
+def test_triangle_stats_paths_bit_identical(spark, monkeypatch):
+    """The driver's counts feed the same Spark clustering expression as
+    the distributed counts, so every double is bit-identical."""
+    from map_reduce_framework_spark.operators import graph
+
+    local = graph.graph_triangle_stats(spark, SF_DIR).collect()
+    monkeypatch.setattr(graph, "LOCAL_MAX_EDGES", 0)
+    distributed = graph.graph_triangle_stats(spark, SF_DIR).collect()
+    assert any(r["n_triangles"] for r in local)
+    assert local == distributed
 
 
 # --------------------------------------------------------------------------

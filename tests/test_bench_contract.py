@@ -103,3 +103,23 @@ def test_scripts_build_sessions_through_get_spark():
             ):
                 offenders.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
     assert not offenders, f"SparkSession.builder outside get_spark: {offenders}"
+
+
+def test_drift_only_against_a_matching_calibration():
+    """The control drift divides by a time recorded at one SF and core
+    count; any other setting gets no drift, so it triggers no redo pass."""
+    bench = _bench_module()
+    sf, cores = bench.CONTROL_REF_SF, bench.CONTROL_REF_PARALLELISM
+    t = {bench.CONTROL_QUERY: 2 * bench.CONTROL_REF_SEC, "join_equi": 1.0}
+    assert bench.drift_of(t, sf, cores) == 2.0
+    assert bench.drift_of(t, 0.01, cores) is None
+    assert bench.drift_of(t, sf, 4) is None
+    assert bench.drift_of({"join_equi": 1.0}, sf, cores) is None
+
+
+def test_sf_read_from_directory_name():
+    bench = _bench_module()
+    assert bench.sf_of("/data/sf0.1") == 0.1
+    assert bench.sf_of("/data/sf0.01/") == 0.01
+    assert bench.sf_of("/tmp/mrfs_sf1") == 1.0
+    assert bench.sf_of("/tmp/corpus") == -1.0

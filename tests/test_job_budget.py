@@ -16,7 +16,7 @@ import pytest
 
 from map_reduce_framework_spark.mapreduce import run_map_reduce
 from map_reduce_framework_spark.operators.dedup import fan_out
-from map_reduce_framework_spark.operators.graph import connected_components
+from map_reduce_framework_spark.operators import graph
 from map_reduce_framework_spark.plans.registry import QUERIES
 from map_reduce_framework_spark.sources import tables
 from map_reduce_framework_spark.sources.tables import TABLES, load_table
@@ -123,8 +123,8 @@ def test_run_map_reduce_jobs(spark, n, budget):
     assert sum(c for _, c in out) == 600
 
 
-#: (edge list, jobs of connected_components plus collecting its result);
-#: the inputs converge in 2, 7, 1 and 1 sweeps
+#: (edge list, jobs of the distributed connected components plus
+#: collecting its result); the inputs converge in 2, 7, 1 and 1 sweeps
 CC_INPUTS = {
     "6-clique": ([(i, j) for i in range(6) for j in range(i + 1, 6)], 20),
     "64-vertex path": ([(i, i + 1) for i in range(63)], 65),
@@ -137,5 +137,33 @@ CC_INPUTS = {
 def test_connected_components_jobs(spark, name):
     edges, budget = CC_INPUTS[name]
     df = spark.createDataFrame(edges, "src long, dst long")
-    _, jobs = _jobs(spark, lambda: connected_components(df, "src", "dst").collect())
+    _, jobs = _jobs(
+        spark,
+        lambda: graph._connected_components_distributed(df, "src", "dst").collect(),
+    )
     assert jobs == budget
+
+
+@pytest.mark.parametrize("name", CC_INPUTS)
+def test_connected_components_local_jobs(spark, name):
+    """Under the edge cap the probe's collect is the only job, however
+    many sweeps the distributed path would run."""
+    edges, _ = CC_INPUTS[name]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    _, jobs = _jobs(
+        spark, lambda: graph.connected_components(df, "src", "dst").collect()
+    )
+    assert jobs == 1
+
+
+@pytest.mark.parametrize("name", [n for n in CC_INPUTS if CC_INPUTS[n][0]])
+def test_connected_components_probe_jobs_above_cap(spark, name, monkeypatch):
+    """Above the cap the probe's collect is wasted: one job more than
+    the distributed path alone."""
+    monkeypatch.setattr(graph, "LOCAL_MAX_EDGES", 0)
+    edges, budget = CC_INPUTS[name]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    _, jobs = _jobs(
+        spark, lambda: graph.connected_components(df, "src", "dst").collect()
+    )
+    assert jobs == budget + 1

@@ -7,6 +7,7 @@ the oracle can't express.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from map_reduce_framework_spark.operators import relational_ext as rx
@@ -129,10 +130,11 @@ def test_ann_ivf_recall_vs_exact(spark):
     assert recall >= 0.2, f"recall collapsed: {recall}"
 
 
-def test_connected_components_property(spark):
-    """Distributed CC must agree with a pure-Python union-find on random
-    small graphs (chains, cliques, isolated pairs, self-loops), an empty
-    edge list, a self-loop-only graph and a 64-vertex path."""
+def test_connected_components_property(spark, graph_path):
+    """CC, on the driver and distributed, must agree with a pure-Python
+    union-find on random small graphs (chains, cliques, isolated pairs,
+    self-loops), an empty edge list, a self-loop-only graph and a
+    64-vertex path."""
     import random
 
     from map_reduce_framework_spark.operators.graph import connected_components
@@ -175,6 +177,23 @@ def test_connected_components_property(spark):
             for r in connected_components(df, "src", "dst").collect()
         }
         assert got == expected, f"trial {trial}: {sorted(got.items())[:5]}..."
+
+
+@pytest.mark.parametrize("id_type", ["int", "long"])
+def test_connected_components_null_endpoint(spark, graph_path, id_type):
+    """A null endpoint is its own (null, null) row and relaxes nothing;
+    the output keeps the input's id type."""
+    from map_reduce_framework_spark.operators.graph import connected_components
+
+    df = spark.createDataFrame(
+        [(1, None), (2, 3), (3, 1)], f"src {id_type}, dst {id_type}"
+    )
+    out = connected_components(df, "src", "dst")
+    assert [f.dataType for f in out.schema] == [f.dataType for f in df.schema]
+    got = sorted(
+        (tuple(r) for r in out.collect()), key=lambda r: (r[0] is None, r[0])
+    )
+    assert got == [(1, 1), (2, 1), (3, 1), (None, None)]
 
 
 def test_approx_percentile_within_2pct_of_exact(spark):
