@@ -159,32 +159,28 @@ def clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .dedup import hash60
 
-    from ..cache import persist_tracked
-    from ..parallel import co_materialize
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # Round-15 (guide §2.6): the quality/lang kernel pass is independent
-    # of the dedup keeplist until the final join — materialize it on a
-    # background thread while the CC sweep's small sequential jobs run
-    # (see ccnet_buckets for the rationale; scheduling only, same DAG).
-    scored = persist_tracked(
-        _stopword_counts(docs).select(
-            "doc_id",
-            quality_expr().alias("quality"),
-            pred_lang_expr().alias("pred_lang"),
-        )
+    # No branch overlap: with the CC sweep on the driver, overlapping
+    # the quality/lang kernel with the keeplist lost an interleaved A/B
+    # (sf0.1, 4 cores, 5 pairs: 4.56 s on vs 4.50 s off, medians)
+    scored = _stopword_counts(docs).select(
+        "doc_id",
+        quality_expr().alias("quality"),
+        pred_lang_expr().alias("pred_lang"),
     )
     permille = hash60(F.col("source")) % MIXTURE_SPREAD + MIXTURE_BASE_PERMILLE
     keep_key = F.concat_ws(":", F.col("source"), F.col("doc_id"))
+    # cheap per row, yet the fanned-out regex count beat one serial pass
+    # over the raw scan at sf0.1, even at one more job: see FAN_OUT_OK
+    # in tests/test_plan_lint.py
     flags = docs.select(
         "doc_id",
         F.regexp_count(F.col("text"), F.lit(_BLOCK_RE)).cast("long").alias("n_hits"),
         (hash60(keep_key) % 1000 < permille).alias("kept_sample"),
     )
-    with co_materialize(scored, "clean_corpus: quality/lang branch (overlapped)"):
-        dedup_verdict = keeplist_unsorted(spark, sf_dir).withColumnRenamed(
-            "kept", "kept_dedup"
-        )
+    dedup_verdict = keeplist_unsorted(spark, sf_dir).withColumnRenamed(
+        "kept", "kept_dedup"
+    )
     out = (
         scored.join(flags, "doc_id")
         .join(dedup_verdict, "doc_id")
@@ -261,7 +257,9 @@ def ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on a background driver thread so its corpus-scale stages
     # back-fill the cores the CC loop leaves free; the final join then
     # reads both branches from cache.  Same DAG, same results —
-    # scheduling only.
+    # scheduling only.  Re-measured with the CC sweep on the driver: it
+    # still won every pair of an interleaved A/B (sf0.1, 4 cores, 5
+    # pairs: 9.52 s on vs 10.32 s off, medians).
     scored = persist_tracked(langs.join(ppl, "doc_id", "left"))
     with co_materialize(scored, "ccnet_buckets: lang+KN branch (overlapped)"):
         keep = keeplist_unsorted(spark, sf_dir).select(

@@ -169,7 +169,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..cache import persist_tracked
 
     emb = persist_tracked(
-        fan_out(load_table(spark, sf_dir, "embeddings")).select(
+        load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
     )
@@ -232,7 +232,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     th = _sem_threshold()
     emb = persist_tracked(
-        fan_out(load_table(spark, sf_dir, "embeddings")).select(
+        load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
     )
@@ -321,7 +321,7 @@ def dedup_semantic_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     th = _sem_threshold()
     emb = persist_tracked(
-        fan_out(load_table(spark, sf_dir, "embeddings")).select(
+        load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
     )
@@ -626,11 +626,14 @@ def _qc_docfeat_from(docs: DataFrame) -> DataFrame:
         (F.col("lang") == QC_POS_LANG).cast("double").alias("y"),
         F.expr("filter(split(text, ' '), x -> x != '')").alias("tk"),
     ).where(F.size("tk") >= 1)
+    # the bias bucket B rides the same explode as the token buckets
+    # (hashes are < B), so every row behind the fan-out feeds the
+    # Generate, and no cheap bias branch re-reads the shuffled docs
     buck = (
-        "transform(tk, t -> CAST(conv(substring(md5(t), 1, 15), 16, 10)"
-        f" AS BIGINT) % {B})"
+        "concat(transform(tk, t -> CAST(conv(substring(md5(t), 1, 15), 16, 10)"
+        f" AS BIGINT) % {B}), array(CAST({B} AS BIGINT)))"
     )
-    counts = (
+    return (
         tk.select(
             "doc_id",
             "y",
@@ -640,13 +643,14 @@ def _qc_docfeat_from(docs: DataFrame) -> DataFrame:
         .groupBy("doc_id", "y", "n_tok", "b")
         .agg(F.count(F.lit(1)).alias("c"))
         .select(
-            "doc_id", "y", "b", (F.col("c") / F.col("n_tok")).alias("x")
+            "doc_id",
+            "y",
+            "b",
+            F.when(F.col("b") == B, F.lit(1.0))
+            .otherwise(F.col("c") / F.col("n_tok"))
+            .alias("x"),
         )
     )
-    bias = tk.select(
-        "doc_id", "y", F.lit(B).cast("long").alias("b"), F.lit(1.0).alias("x")
-    )
-    return counts.unionByName(bias)
 
 
 _QC_GRAD_SCHEMA = "b long, g double"

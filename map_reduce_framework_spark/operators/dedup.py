@@ -198,6 +198,19 @@ def fan_out(df: DataFrame) -> DataFrame:
     already exceeds the default parallelism), so the round-robin shuffle
     is only ever paid when it unlocks idle cores.  ``df`` must be a
     narrow plan over a file scan (see :func:`scan_partitions`).
+
+    The rule for callers: fan out only in front of heavy per-row work —
+    a Python stage (mapInPandas, mapInArrow, applyInPandas, pandas
+    UDFs), a Generate (explode) or a higher-order array function
+    (``transform``/``aggregate``: shingling, cosine math).  The shuffle
+    writes and reads every byte of the row once, so it costs at least
+    one linear pass over the text, and at small scale one more Spark
+    job; a consumer that only projects, hashes, filters, counts regex
+    hits or partially aggregates is cheaper than that pass and reads
+    the raw scan.  Hence the pattern ``scan = load_table(...)``,
+    ``docs = fan_out(scan)``: heavy consumers take ``docs``, cheap ones
+    ``scan``.  ``tests/test_plan_lint.py`` enforces it on every
+    registered query's plan.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if scan_partitions(df) < target:
@@ -216,7 +229,8 @@ def fan_out_sized(
     (the round-13 dedup_embedding_cosine audit: 0.61 → 0.38 s for the
     band stage alone at sf0.1).  At n ≥ rows_per_task·parallelism this
     is exactly :func:`fan_out`; an already-parallel big scan is never
-    down-partitioned.
+    down-partitioned.  The same rule holds: size the fan-out in front
+    of the Python stage it exists for, never in front of cheap work.
     """
     target = min(
         df.sparkSession.sparkContext.defaultParallelism,
@@ -584,7 +598,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     dups).  The synthetic corpus plants near-dups but no byte-identical
     copies, so n_exact_dup is a true 0 at every SF (FIXTURES.md).
     """
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     is_new = _incr_is_new()
     new_docs = docs.where(is_new)
     old_hashes = (
@@ -802,11 +816,12 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     at every test SF, pinned by
     ``tests/test_dedup.py::test_indexed_incremental_equals_derived``.
     """
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    scan = load_table(spark, sf_dir, "documents")
+    docs = fan_out(scan)
     is_new = _incr_is_new()
-    new_docs = docs.where(is_new)
+    new_docs = scan.where(is_new)
     old_hashes = (
-        docs.where(~is_new).select(F.md5(F.col("text")).alias("h")).distinct()
+        scan.where(~is_new).select(F.md5(F.col("text")).alias("h")).distinct()
     )
     exact = (
         new_docs.select("doc_id", F.md5(F.col("text")).alias("h"))
@@ -815,7 +830,7 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("is_exact", F.lit(1))
     )
     idx = gram_index_bucketed(spark, sf_dir)
-    ng = _shingled_docs(new_docs, with_hashes=True).select(
+    ng = _shingled_docs(docs.where(is_new), with_hashes=True).select(
         F.col("doc_id").alias("new_id"), F.explode("gh").alias("g")
     )
     sizes_new = ng.groupBy("new_id").agg(F.count(F.lit(1)).alias("n_a"))
@@ -1021,11 +1036,12 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.bucketing import fingerprinted_table_name, write_bucketed
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    scan = load_table(spark, sf_dir, "documents")
+    docs = fan_out(scan)
     is_new = _incr_is_new()
-    new_docs = docs.where(is_new)
+    new_docs = scan.where(is_new)
     old_hashes = (
-        docs.where(~is_new).select(F.md5(F.col("text")).alias("h")).distinct()
+        scan.where(~is_new).select(F.md5(F.col("text")).alias("h")).distinct()
     )
     exact = (
         new_docs.select("doc_id", F.md5(F.col("text")).alias("h"))
@@ -1039,7 +1055,7 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import cache as _cache
 
     ng = _cache.persist_tracked(
-        _shingled_docs(new_docs, with_hashes=True).select(
+        _shingled_docs(docs.where(is_new), with_hashes=True).select(
             F.col("doc_id").alias("new_id"), F.explode("gh").alias("g")
         )
     )
@@ -1295,7 +1311,7 @@ def dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .. import cache
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     is_new = _incr_is_new()
     new_docs = docs.where(is_new).select("doc_id", "source", _bloom_key().alias("h"))
     # one corpus scan feeds BOTH the Bloom build and the verify join
@@ -1681,12 +1697,12 @@ def dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..cache import persist_tracked
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    scan = load_table(spark, sf_dir, "documents")
     # bounded sample: per-million hash threshold = the 400‰ floor for
     # small corpora, capped so the EXPECTED sample is the fixed target
     # (integer arithmetic; the oracle derives the identical threshold
     # from count(documents))
-    n_total = docs.count()
+    n_total = scan.count()
     thr = min(
         RECALL_SAMPLE_PERMILLE * 1000,
         (RECALL_SAMPLE_TARGET * 1_000_000) // max(n_total, 1),
@@ -1696,9 +1712,11 @@ def dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         % 1_000_000
         < thr
     )
-    sampled = docs.where(in_sample)
+    sampled = scan.where(in_sample)
     sh = persist_tracked(
-        _shingled_docs(sampled, with_hashes=True).select("doc_id", "gh")
+        _shingled_docs(fan_out(scan).where(in_sample), with_hashes=True).select(
+            "doc_id", "gh"
+        )
     )
     sh.count()  # cache-race barrier (see dedup_ngram_jaccard)
     posting = sh.select(
@@ -1874,10 +1892,10 @@ def band_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.bucketing import fingerprinted_table_name, write_bucketed
 
     idx = band_index_bucketed(spark, sf_dir)
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    new_docs = docs.where(_incr_is_new())
+    scan = load_table(spark, sf_dir, "documents")
+    new_docs = scan.where(_incr_is_new())
     new_sigs = cache.persist_tracked(
-        _shingled_docs(new_docs, with_sig=True)
+        _shingled_docs(fan_out(scan).where(_incr_is_new()), with_sig=True)
     )
     new_sigs.count()
     # skinny batch bands (round 10 — see dedup_incremental_minhash_indexed)
@@ -2705,9 +2723,7 @@ def _suffix_window_keys(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     a_len = 1 << (L.bit_length() - 1)  # largest power of two <= L
     rounds = a_len.bit_length() - 1  # log2(a_len) doubling rounds
 
-    docs = fan_out(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Round-14 shuffle slimming (guide §2.3 narrower types): the
     # doubling rounds below are the engine's most exchange-heavy family
     # (4-5 position-table shuffles per round), and (doc_id, off) is a
@@ -2721,7 +2737,7 @@ def _suffix_window_keys(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     # word count (≪ 2^POS_BITS — the same packing invariant pid itself
     # relies on), so the join misses exactly where the old
     # (doc_id, off - step) key missed.  doc_id/off unpack at the end.
-    toks = docs.select(
+    toks = fan_out(docs).select(
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("off", "w"),
     ).select(
@@ -3748,11 +3764,9 @@ def fuzzy_edit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis / entity resolution).
     """
     d = FUZZY_MAX_ED
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    titles = docs.select(
-        "doc_id",
-        F.lower(F.substring("text", 1, FUZZY_TITLE_LEN)).alias("t"),
-    )
+    scan = load_table(spark, sf_dir, "documents")
+    title = F.lower(F.substring("text", 1, FUZZY_TITLE_LEN))
+    titles = fan_out(scan).select("doc_id", title.alias("t"))
     segs = titles.select(
         F.col("doc_id").alias("id_a"),
         F.col("t").alias("t_a"),
@@ -3767,7 +3781,7 @@ def fuzzy_edit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" {_seg_len_expr('i', 'length(t_a)')})"
         ).alias("c"),
     )
-    lens = titles.select(F.length("t").alias("ltgt")).distinct()
+    lens = scan.select(F.length(title).alias("ltgt")).distinct()
     probes = (
         titles.join(
             F.broadcast(lens),

@@ -255,28 +255,37 @@ def dedup_pipeline_keeplist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keeplist_unsorted(spark, sf_dir).orderBy("doc_id")
 
 
+def exact_dup_edges(docs: DataFrame) -> DataFrame:
+    """Exact-duplicate star edges ``(doc_a = root, doc_b)``: every
+    document whose text's md5 equals an earlier one links to the
+    group's lowest doc_id.
+
+    Partial-agg roots + equi-join, NOT ``min().over(partitionBy(h))``:
+    a boilerplate page duplicated millions of times is a hot content
+    hash, and a window partition cannot be AQE-split — the join can,
+    and only combiner rows shuffle for the roots side (same skew-safe
+    shape as the gram-df cap).  Pass the raw scan: an md5 per row is
+    cheaper than the round-robin shuffle :func:`~.dedup.fan_out` would
+    put in front of it."""
+    hashed = docs.select("doc_id", F.md5(F.col("text")).alias("h"))
+    roots = hashed.groupBy("h").agg(F.min("doc_id").alias("root"))
+    return (
+        hashed.join(roots, "h")
+        .where(F.col("doc_id") != F.col("root"))
+        .select(F.col("root").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+    )
+
+
 def keeplist_unsorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`dedup_pipeline_keeplist` without the presentation sort —
     for composition (e.g. ``clean_corpus``) where a downstream join
     would destroy the order anyway."""
     from ..sources import load_table
 
-    docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    # exact-dup star edges via partial-agg roots + equi-join, NOT
-    # min().over(partitionBy(h)): a boilerplate page duplicated millions
-    # of times is a hot content hash, and a window partition cannot be
-    # AQE-split — the join can, and only combiner rows shuffle for the
-    # roots side (same skew-safe shape as the gram-df cap).
-    hashed = docs.select("doc_id", F.md5(F.col("text")).alias("h"))
-    roots = hashed.groupBy("h").agg(F.min("doc_id").alias("root"))
-    exact_edges = (
-        hashed.join(roots, "h")
-        .where(F.col("doc_id") != F.col("root"))
-        .select(F.col("root").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    )
+    docs = load_table(spark, sf_dir, "documents")
     near_edges = dedup.minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     labels = connected_components(
-        exact_edges.union(near_edges), "doc_a", "doc_b"
+        exact_dup_edges(docs).union(near_edges), "doc_a", "doc_b"
     ).select(F.col("id").alias("doc_id"), F.col("label").alias("cl"))
     return (
         docs.select("doc_id")
@@ -320,23 +329,19 @@ def dedup_keeplist_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import load_table
     from .text import _stopword_counts, quality_expr
 
-    docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    # Round-15 (guide §2.6): the quality kernel is independent of the
-    # CC keeplist until the join — materialize it on a background
-    # thread while the CC sweep's small sequential jobs run (see
-    # ccnet_buckets; scheduling only, same DAG).
     from ..cache import persist_tracked
-    from ..parallel import co_materialize
 
+    docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
+    # persisted: both the survivor argmax and the final join read it.
+    # No branch overlap with the keeplist: with the CC sweep on the
+    # driver it lost an interleaved A/B (sf0.1, 4 cores, 5 pairs:
+    # 3.33 s on vs 3.26 s off, medians)
     q = persist_tracked(
         _stopword_counts(docs).select(
             "doc_id", quality_expr().alias("quality")
         )
     )
-    with co_materialize(q, "dedup_keeplist_quality: quality branch (overlapped)"):
-        clusters = keeplist_unsorted(spark, sf_dir).select(
-            "doc_id", "cluster_id"
-        )
+    clusters = keeplist_unsorted(spark, sf_dir).select("doc_id", "cluster_id")
     m = clusters.join(q, "doc_id")
     # fail-loud capacity guard: an id past the 8-digit field would keep
     # its '-' sign through lpad and silently corrupt the string argmax

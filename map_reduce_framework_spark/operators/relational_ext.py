@@ -2551,10 +2551,10 @@ def agg_view_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     costing a batch scan vs a corpus scan.  Refresh is rerun-idempotent
     (the merge never writes; the returned view IS base ⊎ batch).
     """
-    from .dedup import _incr_is_new, fan_out
+    from .dedup import _incr_is_new
     from ..sources.bucketing import fingerprinted_table_name, write_bucketed
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     table = fingerprinted_table_name("mrfs_aggmv", sf_dir, "documents")
     if not spark.catalog.tableExists(table):
         write_bucketed(

@@ -49,12 +49,12 @@ IVF_TOP_K = 5
 
 
 def _corpus_and_queries(spark: SparkSession, sf_dir: str):
-    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    corpus = emb.select(
+    scan = load_table(spark, sf_dir, "embeddings")
+    corpus = fan_out(scan).select(
         F.col("vec_id").alias("cand_id"),
         unit_vector_col("embedding").alias("vc"),
     )
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
+    queries = scan.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         unit_vector_col("embedding").alias("vq"),
     )
@@ -202,7 +202,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly.
     """
     corpus, queries = _corpus_and_queries(spark, sf_dir)
-    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.where(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cent_id"),
         unit_vector_col("embedding").alias("vcent"),
@@ -224,7 +224,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..cache import persist_tracked
 
     emb_raw = persist_tracked(
-        fan_out(load_table(spark, sf_dir, "embeddings")).select(
+        load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
     )
@@ -262,7 +262,7 @@ def ivf_index_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = fingerprinted_table_name(IVF_INDEX_TABLE, sf_dir, "embeddings")
     if not spark.catalog.tableExists(table):
         corpus, _ = _corpus_and_queries(spark, sf_dir)
-        emb = fan_out(load_table(spark, sf_dir, "embeddings"))
+        emb = load_table(spark, sf_dir, "embeddings")
         centroids = emb.where(F.col("vec_id") < N_CENTROIDS).select(
             F.col("vec_id").alias("cent_id"),
             unit_vector_col("embedding").alias("vcent"),
@@ -279,7 +279,7 @@ def ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     to :func:`ann_ivf` (same deterministic first-N centroids, same
     probe ranking), so it shares that oracle's SQL."""
     corpus_cells = ivf_index_bucketed(spark, sf_dir)
-    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.where(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cent_id"),
         unit_vector_col("embedding").alias("vcent"),
@@ -509,17 +509,21 @@ def ann_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.bucketing import fingerprinted_table_name, write_bucketed
 
-    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    unit = emb.select(
+    scan = load_table(spark, sf_dir, "embeddings")
+    unit = fan_out(scan).select(
         "vec_id", "label", unit_vector_col("embedding").alias("v")
     )
     is_new = _vec_is_new()
     oldv = unit.where(~is_new)
     newv = unit.where(is_new)
     cents = (
-        oldv.orderBy("vec_id")
+        scan.where(~is_new)
+        .orderBy("vec_id")
         .limit(N_CENTROIDS)
-        .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("vcent"))
+        .select(
+            F.col("vec_id").alias("cent_id"),
+            unit_vector_col("embedding").alias("vcent"),
+        )
     )
     # immutable base cell index: corpus-linear assignment paid once per
     # session/index build, never per batch
@@ -567,7 +571,8 @@ def ann_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("hit", F.lit(1))
     )
     return (
-        newv.select(F.col("vec_id").alias("query_id"), "label")
+        scan.where(is_new)
+        .select(F.col("vec_id").alias("query_id"), "label")
         .join(self_hits, "query_id", "left")
         .groupBy("label")
         .agg(
@@ -774,7 +779,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _first_n_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The frozen first-N coarse quantizer shared by the IVF family."""
-    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
+    emb = load_table(spark, sf_dir, "embeddings")
     return emb.where(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cent_id"),
         unit_vector_col("embedding").alias("vcent"),
@@ -1330,10 +1335,12 @@ def contamination_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data-pipeline family).
     """
     K = CONTAM_EMB_BENCH
-    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    corpus = emb.where(F.col("vec_id") >= K).select("vec_id", "embedding")
+    scan = load_table(spark, sf_dir, "embeddings")
+    corpus = (
+        fan_out(scan).where(F.col("vec_id") >= K).select("vec_id", "embedding")
+    )
     bench_rows = sorted(
-        emb.where(F.col("vec_id") < K)
+        scan.where(F.col("vec_id") < K)
         .select("vec_id", "embedding")
         .collect(),  # bounded: < K rows by construction
         key=lambda r: r.vec_id,

@@ -317,7 +317,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish pre-tokenizer counts per doc + whitespace-token baseline."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     bpe = F.regexp_extract_all(F.col("text"), F.lit(BPE_TOKEN_RE), 0)
     return docs.select(
         "doc_id",
@@ -389,7 +389,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .dedup import hash60
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     key = F.concat_ws(":", F.col("lang"), F.col("doc_id"))
     return (
         docs.where(hash60(key) % 1000 < STRATA_PERMILLE)
@@ -446,12 +446,13 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a float SUM over a group has no deterministic order).
     """
     q_terms = list(BM25_QUERY_TERMS)
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    lens = docs.select(
+    scan = load_table(spark, sf_dir, "documents")
+    docs = fan_out(scan)
+    lens = scan.select(
         "doc_id", F.size(F.split(F.col("text"), " ")).cast("double").alias("dl")
     )
     avgdl = lens.agg(F.avg("dl").alias("avgdl"))
-    n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
+    n_docs = scan.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
     toks = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
     ).where(F.col("term").isin(q_terms))
@@ -552,7 +553,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (integer token counts — association-free), with every
     row-level task bounded by one bucket of one source.
     """
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split(F.col("text"), " "))
     toks = docs.select(
         "doc_id",
@@ -715,7 +716,8 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .dedup import hash60, shingles
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    scan = load_table(spark, sf_dir, "documents")
+    docs = fan_out(scan)
     grams = docs.select(
         "doc_id", F.explode(shingles()).alias("gram")
     ).withColumn("g", hash60(F.col("gram")))
@@ -731,7 +733,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
     )
     return (
-        docs.where(F.col("doc_id") >= CONTAM_BENCHMARK_DOCS)
+        scan.where(F.col("doc_id") >= CONTAM_BENCHMARK_DOCS)
         .select("doc_id")
         .join(shared, "doc_id", "left")
         .select(
@@ -768,11 +770,12 @@ def tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ranking uses the 6-dp-rounded score with term tie-break, so order is
     float-ulp-stable across engines.
     """
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    scan = load_table(spark, sf_dir, "documents")
+    docs = fan_out(scan)
     toks = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
     ).where(F.col("term") != "")
-    n_docs = docs.agg(F.count_distinct(F.col("doc_id")).alias("n_docs"))
+    n_docs = scan.agg(F.count_distinct(F.col("doc_id")).alias("n_docs"))
     df_t = toks.distinct().groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     tf = (
         toks.where(F.col("doc_id") < TFIDF_DOC_LIMIT)
@@ -821,7 +824,7 @@ def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .dedup import hash60
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     permille = (
         hash60(F.col("source")) % MIXTURE_SPREAD + MIXTURE_BASE_PERMILLE
     )
@@ -1737,7 +1740,7 @@ def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .dedup import hash60
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"),
         F.size("embedding").alias("embedding_dim"),
@@ -2583,11 +2586,7 @@ def _exact_recount(docs: DataFrame, cands: DataFrame, k: int) -> DataFrame:
     toks = docs.select(
         F.explode(F.split(F.col("text"), " ")).alias("token")
     )
-    total = docs.agg(
-        F.sum(F.size(F.split(F.col("text"), " ")))
-        .cast("double")
-        .alias("n")
-    )
+    total = toks.agg(F.count(F.lit(1)).cast("double").alias("n"))
     counted = (
         toks.join(F.broadcast(cands), "token")
         .groupBy("token")
@@ -2770,7 +2769,7 @@ def token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what downstream samplers (``mixture_sample``,
     ``quality_weighted_sample``) would be configured with.
     """
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     inv = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split(F.col("text"), " ")))

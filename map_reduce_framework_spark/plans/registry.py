@@ -59,16 +59,17 @@ RECORDS = Path(__file__).resolve().parents[2]
 #: The one hand-kept input to the window: rows whose plan changed this
 #: round, so they get a fresh correctness row now whatever their last green
 #: round.  Keep it short — it may not push out any row of the stalest
-#: round (``tests/test_registry_order.py`` checks that).  Now: the two
-#: branch-overlap composites with no correctness row since the overlap,
-#: and three graph consumers that now compute on the driver under
-#: ``graph.LOCAL_MAX_EDGES`` (the k-core peel has no other window row).
+#: round (``tests/test_registry_order.py`` checks that).  Now: the
+#: three keeplist composites (cheap consumers read the raw scan, and
+#: clean_corpus and dedup_keeplist_quality lost their branch overlap),
+#: quality_classifier_score (its bias feature now rides the token
+#: explode) and dedup_semantic (its cached embeddings lost the fan-out).
 CHANGED = [
     "ccnet_buckets",
     "clean_corpus",
     "dedup_keeplist_quality",
-    "kcore_membership",
-    "media_dedup_clusters",
+    "dedup_semantic",
+    "quality_classifier_score",
 ]
 
 

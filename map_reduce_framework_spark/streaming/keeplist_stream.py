@@ -71,11 +71,12 @@ def build_corpus_index(
         "sizes": _work_dir(sf_dir, "sizes", stream_id),
         "overcap": _work_dir(sf_dir, "overcap", stream_id),
     }
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    old = docs.where(~_incr_is_new())
-    old.select(F.md5("text").alias("h")).distinct().write.mode(
+    scan = load_table(spark, sf_dir, "documents")
+    is_old = ~_incr_is_new()
+    scan.where(is_old).select(F.md5("text").alias("h")).distinct().write.mode(
         "overwrite"
     ).parquet(paths["hashes"])
+    old = fan_out(scan).where(is_old)
     posting = _shingled_docs(old, with_hashes=True).select(
         "doc_id", F.explode("gh").alias("g")
     ).persist()

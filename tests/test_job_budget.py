@@ -14,9 +14,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from map_reduce_framework_spark import cache
 from map_reduce_framework_spark.mapreduce import run_map_reduce
 from map_reduce_framework_spark.operators.dedup import fan_out
-from map_reduce_framework_spark.operators import graph
+from map_reduce_framework_spark.operators import cleaning, graph
 from map_reduce_framework_spark.plans.registry import QUERIES
 from map_reduce_framework_spark.sources import tables
 from map_reduce_framework_spark.sources.tables import TABLES, load_table
@@ -61,6 +62,33 @@ def test_fan_out_runs_no_job(spark, name, monkeypatch):
         _, n = _jobs(spark, lambda: fan_out(load_table(spark, SF_DIR, name)))
         assert n == 0, memo
     assert tables._PARTITIONS_CACHE
+
+
+#: (query, build-time jobs, action jobs) of the corpus composites,
+#: warm: the exact-dup edges and the keeplist's doc_id list read the
+#: raw scan, so no round-robin fan-out shuffle runs in front of them
+COMPOSITE_JOBS = {
+    "keeplist_unsorted": (graph.keeplist_unsorted, 11, None),
+    "clean_corpus": (cleaning.clean_corpus, 11, 9),
+}
+
+
+@pytest.mark.parametrize("name", COMPOSITE_JOBS)
+def test_corpus_composite_jobs(spark, name):
+    fn, build_budget, action_budget = COMPOSITE_JOBS[name]
+    spark.catalog.clearCache()  # no other test's cache may stand in
+    try:
+        fn(spark, SF_DIR)  # warms the schema and partition-count memos
+        cache.release()
+        df, n = _jobs(spark, lambda: fn(spark, SF_DIR))
+        assert n == build_budget
+        if action_budget is not None:
+            _, n = _jobs(
+                spark, lambda: df.write.format("noop").mode("overwrite").save()
+            )
+            assert n == action_budget
+    finally:
+        cache.release()
 
 
 @pytest.mark.parametrize("name", LAZY_QUERIES)

@@ -69,15 +69,15 @@ def test_co_materialize_noop_when_disabled(spark, monkeypatch):
 def test_overlap_results_identical_both_modes(spark, monkeypatch):
     """The overlap is scheduling-only: a composite that uses
     co_materialize must return bit-identical rows with the switch on
-    and off (clean_corpus at the smallest SF exercises the real
+    and off (ccnet_buckets at the smallest SF exercises the real
     code path)."""
     from map_reduce_framework_spark import cache
-    from map_reduce_framework_spark.operators.cleaning import clean_corpus
+    from map_reduce_framework_spark.operators.cleaning import ccnet_buckets
 
     from .conftest import SF_DIR
 
     def run():
-        rows = clean_corpus(spark, SF_DIR).collect()
+        rows = ccnet_buckets(spark, SF_DIR).collect()
         cache.release()
         spark.catalog.clearCache()
         return rows

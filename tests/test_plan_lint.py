@@ -2,14 +2,15 @@
 
 test_plans.py asserts positive plan properties on chosen exemplars; this
 suite asserts the NEGATIVE space across the whole registry — no
-unbounded cartesian product and no row-at-a-time Python evaluation may
-appear in any query's physical plan.  Both are 100×-scale performance
-bugs that value-level tests can never catch.
+unbounded cartesian product, no row-at-a-time Python evaluation, no
+window over a low-cardinality key alone, and no round-robin fan-out in
+front of cheap work may appear in any query's physical plan.  All are
+scale or job-count bugs that value-level tests can never catch.
 
-Plans are built (not executed) at the smallest SF.  Queries whose
-CONSTRUCTION trains a model (k-means) execute small jobs while building;
-they are included anyway — the lint inspects their final plan like any
-other.
+Plans are built (not executed) at the smallest SF, once per query for
+all the checks.  Queries whose CONSTRUCTION trains a model (k-means)
+execute small jobs while building; they are included anyway — the lint
+inspects their final plan like any other.
 """
 
 from __future__ import annotations
@@ -35,21 +36,120 @@ CARTESIAN_OK = {"join_cross"}
 ROW_PYTHON_OK = {"python_udtf_tokens"}
 
 
-def _plan(df) -> str:
+#: queries allowed a round-robin fan-out with no heavy consumer in its
+#: stage, name → a one-line measured reason (an interleaved A/B of the
+#: row with and without the fan-out; bench.py, sf0.1, 4 cores).
+FAN_OUT_OK: dict[str, str] = {
+    "clean_corpus": (
+        "flags (regex count, sample hash) on the raw scan: one job fewer "
+        "but 5.02 vs 4.78 s (4 pairs, medians; 3 of 4 slower)"
+    ),
+}
+
+
+def _explain(df, mode: str) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
+        df.explain(mode=mode)
     return buf.getvalue()
+
+
+#: every Python-evaluation exec (MapInPandas, MapInArrow,
+#: FlatMapGroupsInPandas, ArrowEvalPython, ...) lives in this package
+_PYTHON_EXECS = "org.apache.spark.sql.execution.python."
+
+#: nodes that end a stage for the fan-out check: what sits under them
+#: runs in an earlier stage (or, under a cache scan, when the cache is
+#: filled)
+_STAGE_ENDS = {
+    "ShuffleExchangeExec",
+    "BroadcastExchangeExec",
+    "InMemoryTableScanExec",
+    "AdaptiveSparkPlanExec",
+}
+
+
+def _children(node, cls: str) -> list:
+    if cls == "AdaptiveSparkPlanExec":
+        # the current plan: the initial physical plan (exchanges
+        # included, no job run) until the plan executes, then the final
+        # one; a filled cache's plan is a final one
+        return [node.executedPlan()]
+    if cls.endswith("QueryStageExec"):
+        return [node.plan()]
+    if cls == "InMemoryTableScanExec":
+        return [node.relation().cachedPlan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _is_heavy(node, full_cls: str, cls: str) -> bool:
+    return (
+        full_cls.startswith(_PYTHON_EXECS)
+        or cls == "GenerateExec"
+        or "lambdafunction" in node.expressions().toString()
+    )
+
+
+def _idle_fan_outs(df) -> list[str]:
+    """Every ``RoundRobinPartitioning … REPARTITION_BY_NUM`` exchange
+    (:func:`~map_reduce_framework_spark.operators.dedup.fan_out`'s
+    shuffle) whose consumer stage — its ancestors up to the next
+    exchange, broadcast, cache scan or root — holds no Python node, no
+    Generate and no lambda function, described by that consumer chain.
+
+    Walks the physical tree over py4j, cached plans included, so it
+    reads node classes instead of the formatted text."""
+    found = []
+
+    def walk(node, heavy_above: bool, chain: tuple) -> None:
+        full_cls = node.getClass().getName()
+        cls = full_cls.rsplit(".", 1)[1]
+        if (
+            cls == "ShuffleExchangeExec"
+            and not heavy_above
+            and node.outputPartitioning().getClass().getName().endswith(
+                "RoundRobinPartitioning"
+            )
+            and node.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+        ):
+            found.append(" < ".join(("RoundRobin",) + chain[::-1]))
+        if cls in _STAGE_ENDS:
+            heavy_above, chain = False, (cls,)
+        elif not cls.endswith("QueryStageExec"):
+            heavy_above = heavy_above or _is_heavy(node, full_cls, cls)
+            chain = chain + (cls,)
+        for kid in _children(node, cls):
+            walk(kid, heavy_above, chain)
+
+    walk(df._jdf.queryExecution().executedPlan(), False, ("root",))
+    return found
+
+
+#: name → (formatted plan, simple plan, idle fan-outs): each query is
+#: built once for every check in this module
+_BUILT: dict[str, tuple[str, str, list[str]]] = {}
+
+
+def _built(spark, name: str) -> tuple[str, str, list[str]]:
+    if name not in _BUILT:
+        from map_reduce_framework_spark import cache
+
+        try:
+            df = registry.QUERIES[name](spark, SF_DIR)
+            _BUILT[name] = (
+                _explain(df, "formatted"),
+                _explain(df, "simple"),
+                _idle_fan_outs(df),
+            )
+        finally:
+            cache.release()
+    return _BUILT[name]
 
 
 @pytest.mark.parametrize("name", sorted(registry.QUERIES))
 def test_no_structural_antipatterns(spark, name):
-    from map_reduce_framework_spark import cache
-
-    try:
-        plan = _plan(registry.QUERIES[name](spark, SF_DIR))
-    finally:
-        cache.release()
+    plan = _built(spark, name)[0]
     if name not in CARTESIAN_OK:
         assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     if name not in ROW_PYTHON_OK:
@@ -112,18 +212,26 @@ def test_no_low_cardinality_windows(spark, name):
     window over bucket-level aggregates)."""
     if name in AGGREGATE_PHASE_WINDOW_OK:
         pytest.skip("audited second-phase window over bucket aggregates")
-    from map_reduce_framework_spark import cache
-
-    try:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            registry.QUERIES[name](spark, SF_DIR).explain(mode="simple")
-        plan = buf.getvalue()
-    finally:
-        cache.release()
+    plan = _built(spark, name)[1]
     for cols in _partition_cols(plan):
         if cols:  # global windows are audited case-by-case elsewhere
             assert not cols <= LOW_CARD_COLS, (
                 f"{name}: window partitioned only by low-cardinality "
                 f"{sorted(cols)} — one task per key at scale"
             )
+
+
+@pytest.mark.parametrize("name", sorted(registry.QUERIES))
+def test_fan_out_feeds_heavy_work(spark, name):
+    """A round-robin fan-out shuffle writes and reads every byte of the
+    row once, so it pays only in front of heavy per-row work: a Python
+    stage, a Generate (explode) or a higher-order function.  A cheap
+    consumer (project, hash, filter, regex count, partial aggregate)
+    must read the raw ``load_table`` scan instead."""
+    if name in FAN_OUT_OK:
+        pytest.skip(FAN_OUT_OK[name])
+    idle = _built(spark, name)[2]
+    assert not idle, (
+        f"{name}: fan-out with no heavy consumer in its stage — feed "
+        f"these from the raw scan: {idle}"
+    )

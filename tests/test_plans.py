@@ -200,9 +200,9 @@ def test_stratified_sample_filters_before_any_exchange(spark):
     from map_reduce_framework_spark.operators import text
 
     plan = plan_of(text.stratified_sample(spark, SF_DIR), mode="simple")
-    # fan_out may add one round-robin on the tiny scan; agg + orderBy add
-    # at most two more — the point is no extra join/window exchanges
-    assert plan.count("Exchange") <= 3
+    # only the agg and the orderBy exchange: no fan-out in front of a
+    # hash filter, and no extra join/window exchanges
+    assert plan.count("Exchange") <= 2
     assert plan.count("HashAggregate") >= 2
     filter_pos = plan.find("Filter")
     agg_exchange_pos = plan.find("Exchange hashpartitioning")
@@ -248,11 +248,12 @@ def test_tfidf_topk_cut_below_window_and_broadcast_vocab(spark):
 
 def test_mixture_sample_no_extra_exchanges(spark):
     """The keep decision is a pure hash expression evaluated pre-shuffle;
-    only fan_out + the aggregate + the orderBy may exchange."""
+    only the aggregate + the orderBy may exchange (no fan-out in front
+    of cheap hashing)."""
     from map_reduce_framework_spark.operators import text
 
     plan = plan_of(text.mixture_sample(spark, SF_DIR), mode="simple")
-    assert plan.count("Exchange") <= 3
+    assert plan.count("Exchange") <= 2
     assert plan.count("HashAggregate") >= 2
     assert "Join" not in plan  # rate is derived, not joined, in this form
 
@@ -424,27 +425,20 @@ def test_gram_index_join_shuffles_batch_side_only(spark):
 
 
 def test_keeplist_exact_edges_partial_agg_not_window(spark):
-    """Exact-dup star edges must come from a partial-agg roots groupBy +
-    equi-join, never min().over(partitionBy(content_hash)): a hot
-    boilerplate hash would colocate its whole clone set in one window
-    task, and window partitions cannot be AQE-skew-split — the join
-    can."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_framework_spark.operators import dedup
+    """Exact-dup star edges (the keeplist's ``exact_dup_edges``) must
+    come from a partial-agg roots groupBy + equi-join, never
+    min().over(partitionBy(content_hash)): a hot boilerplate hash would
+    colocate its whole clone set in one window task, and window
+    partitions cannot be AQE-skew-split — the join can.  The md5 is
+    cheap per row, so no round-robin fan-out may sit in front of it."""
+    from map_reduce_framework_spark.operators.graph import exact_dup_edges
     from map_reduce_framework_spark.sources import load_table
 
-    docs = dedup.fan_out(load_table(spark, SF_DIR, "documents"))
-    hashed = docs.select("doc_id", F.md5(F.col("text")).alias("h"))
-    roots = hashed.groupBy("h").agg(F.min("doc_id").alias("root"))
-    edges = (
-        hashed.join(roots, "h")
-        .where(F.col("doc_id") != F.col("root"))
-        .select(F.col("root").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    )
+    edges = exact_dup_edges(load_table(spark, SF_DIR, "documents"))
     plan = plan_of(edges, mode="simple")
     formatted = plan_of(edges, mode="formatted")
     assert "Window" not in plan, plan
+    assert "RoundRobinPartitioning" not in plan, plan
     assert (
         "partial_min" in formatted or "Functions: [partial_" in formatted
     ), formatted
