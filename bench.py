@@ -1,18 +1,24 @@
 #!/usr/bin/env python
 """Bench harness — one JSON line of per-query wall seconds.
 
-Runs the headline query set at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints exactly
-one JSON line::
-
-    {"metric": "headline_queries_total", "value": N, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": 0.1}
+Runs the headline query set (or ``$SPARK_GRAFT_BENCH_QUERIES``) at
+``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
+``local[$SPARK_GRAFT_CPUS]``.
 
 Execution materializes each query with the noop sink (full computation,
-no driver collect cost).  Each query runs once after a shared session
-warm-up — per-round numbers land in BENCH_r{N}.json and become the
-baseline future rounds must hold or beat (BASELINE.md: reference
-publishes no numbers of its own).
+no driver collect cost).  After a shared session warm-up, each query
+runs ``RUNS_PER_QUERY`` times and keeps its best time.  When the control
+query's drift exceeds ``DRIFT_REDO``, up to ``DRIFT_REDO_PASSES`` more
+passes run and fold their minima in.
+
+The full record (every query's time, load, drift) is written to
+``BENCH_LOCAL.json`` next to this script and appended to
+``scripts/bench_history.jsonl``.  Stdout gets exactly one JSON line: the
+same record with only the 5 slowest queries::
+
+    {"metric": "headline_queries_total", "value": N, "unit": "sec", ...,
+     "n_queries": 105, "queries": {"q1": sec, ...},
+     "full_record": "BENCH_LOCAL.json"}
 """
 
 from __future__ import annotations

@@ -26,29 +26,16 @@ from ..operators.cleaning import (
     pii_redact_docs,
 )
 from ..sources import load_table
-from .scoring_stream import DOCS_SCHEMA, _docs_stream_dir
+from .feeds import docs_feed, drain_to_memory, linked_stream_dir
 
 
 def _run_map_only(
     spark: SparkSession, sf_dir: str, builder, table: str
 ) -> DataFrame:
     """Drain the documents feed through a stateless projection builder
-    with availableNow + append mode; return the materialized result."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .format("parquet")
-        .load(_docs_stream_dir(sf_dir))
-    )
-    q = (
-        builder(stream)
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table)
+    in append mode; return the materialized result."""
+    stream = docs_feed(spark, linked_stream_dir(sf_dir, "documents"))
+    return drain_to_memory(builder(stream), table, "append")
 
 
 def run_pii_stream_demo(

@@ -10,33 +10,17 @@ that survives an unbounded 100 TB/day stream (a plain
 
 The demo feeds the events table TWICE (two links to the same parquet in
 the stream directory ⇒ every event id arrives exactly twice) and drains
-with ``availableNow``; the result must equal the batch ``SELECT
-DISTINCT`` — tested in tests/test_streaming.py.
+the backlog; the result must equal the batch ``SELECT DISTINCT`` —
+tested in tests/test_streaming.py.
 """
 
 from __future__ import annotations
-
-import hashlib
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .events_stream import events_stream_source
-
-
-def _doubled_stream_dir(sf_dir: str) -> str:
-    """Stream dir containing the events parquet twice (duplicate feed)."""
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"mrfs_events_dup_stream_{tag}")
-    os.makedirs(d, exist_ok=True)
-    src = os.path.join(sf_dir, "events.parquet")
-    for name in ("events_a.parquet", "events_b.parquet"):
-        link = os.path.join(d, name)
-        if not os.path.exists(link):
-            os.symlink(src, link)
-    return d
+from .feeds import drain_to_memory, linked_stream_dir
 
 
 def streaming_dedup(
@@ -48,7 +32,7 @@ def streaming_dedup(
     copies arrive in the same backlog, so any horizon works; on a real
     at-least-once source it is the redelivery SLA + disorder bound).
     """
-    stream = events_stream_source(spark, _doubled_stream_dir(sf_dir))
+    stream = events_stream_source(spark, linked_stream_dir(sf_dir, "events", 2))
     return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -57,15 +41,6 @@ def streaming_dedup(
 def run_streaming_dedup_demo(
     spark: SparkSession, sf_dir: str, table: str = "dedup_stream_demo"
 ) -> DataFrame:
-    """Drain the doubled feed with availableNow; return the deduped
-    rows from the memory sink."""
-    q = (
-        streaming_dedup(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table)
+    """Drain the doubled feed; return the deduped rows from the memory
+    sink."""
+    return drain_to_memory(streaming_dedup(spark, sf_dir), table, "append")

@@ -16,22 +16,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.audit import drift_bucket_counts, drift_from_counts
-from .events_stream import _events_stream_dir, events_stream_source
+from .events_stream import events_stream_source
+from .feeds import drain_to_memory, linked_stream_dir
 
 
 def run_drift_stream_demo(
     spark: SparkSession, sf_dir: str, table: str = "drift_stream_demo"
 ) -> DataFrame:
-    """Drain the events feed with availableNow; return the drift table
-    computed from the live counters."""
-    stream = events_stream_source(spark, _events_stream_dir(sf_dir))
-    q = (
-        drift_bucket_counts(stream)
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    """Drain the events feed; return the drift table computed from the
+    live counters."""
+    stream = events_stream_source(spark, linked_stream_dir(sf_dir, "events"))
+    return drift_from_counts(
+        drain_to_memory(drift_bucket_counts(stream), table, "complete")
     )
-    q.awaitTermination()
-    return drift_from_counts(spark.table(table))

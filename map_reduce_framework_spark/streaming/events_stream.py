@@ -7,10 +7,11 @@ detail, not event-time semantics).  This module is the engine's
 
 - file-source ``readStream`` over the events parquet,
 - event-time tumbling window + watermark (late-data bound),
-- ``availableNow`` trigger → processes the backlog exactly once and
-  terminates, which makes the demo deterministic and testable: its result
-  must equal the batch ``relational.events_time_window`` aggregation
-  (same logical query, streaming execution).
+- the available-now drain (:mod:`.feeds`) → processes the backlog
+  exactly once and terminates, which makes the demo deterministic and
+  testable: its result must equal the batch
+  ``relational.events_time_window`` aggregation (same logical query,
+  streaming execution).
 
 At scale the same pipeline pointed at a Kafka/file-drop source with a
 continuous trigger is the production shape; state-store size is bounded
@@ -23,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import rnd
+from .feeds import drain_to_memory, linked_stream_dir
 
 _EVENTS_COLS = (
     "event_id long, {ts}, user_id long, event_type string, "
@@ -84,7 +86,7 @@ def events_stream_source(
         schema = _EVENTS_COLS.format(ts="ts timestamp")
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger:
-        # forces multiple micro-batches under availableNow — exercises the
+        # forces multiple micro-batches in one drain — exercises the
         # cross-batch state retention the watermarks must guarantee
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     df = reader.load(stream_dir)
@@ -95,29 +97,12 @@ def events_stream_source(
     return df
 
 
-def _events_stream_dir(sf_dir: str) -> str:
-    """FileStreamSource needs a *directory*; expose the single events
-    parquet through a per-sf temp dir with a symlink (read-only testdata
-    stays untouched)."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"mrfs_events_stream_{tag}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-    return d
-
-
 def streaming_event_counts(
     spark: SparkSession, sf_dir: str, watermark: str = "1 hour"
 ) -> DataFrame:
     """Build the streaming DataFrame: 1-hour tumbling windows per
     event_type with a watermark (unbounded-late rows dropped)."""
-    stream = events_stream_source(spark, _events_stream_dir(sf_dir))
+    stream = events_stream_source(spark, linked_stream_dir(sf_dir, "events"))
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
@@ -137,15 +122,6 @@ def streaming_event_counts(
 def run_events_stream_demo(
     spark: SparkSession, sf_dir: str, table: str = "events_stream_demo"
 ) -> DataFrame:
-    """Run the stream with availableNow (drain-and-stop), return the
-    result as a batch DataFrame from the in-memory sink."""
-    agg = streaming_event_counts(spark, sf_dir)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table)
+    """Drain the stream; return the result as a batch DataFrame from
+    the in-memory sink."""
+    return drain_to_memory(streaming_event_counts(spark, sf_dir), table, "complete")

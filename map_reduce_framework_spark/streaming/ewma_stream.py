@@ -15,7 +15,7 @@ bit-exactly, before and after the shared 4-dp rounding.
 
 Ordering contract: correctness of any order-dependent streaming fold
 requires the feed to deliver a key's rows in event order across
-micro-batches (here: time-split files under ``availableNow`` +
+micro-batches (here: time-split files under one drain with
 ``maxFilesPerTrigger``).  Out-of-order arrivals WITHIN a batch are
 repaired by the per-batch sort; arrivals that cross batch boundaries
 out of order would need an event-time buffer (watermark + sort in
@@ -38,7 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.relational_ext import EWMA_ALPHA
-from .events_stream import _events_stream_dir, events_stream_source
+from .events_stream import events_stream_source
+from .feeds import drain_to_memory, final_updates, linked_stream_dir
 
 OUTPUT_SCHEMA = "user_id long, n_events long, last_value double, ewma double"
 STATE_SCHEMA = "s double, n long, last_x double"
@@ -108,29 +109,12 @@ def run_ewma_stream_demo(
     stream_dir: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Drain the backlog with availableNow; return the FINAL row per
-    user (update mode emits one row per touched user per micro-batch —
-    the last micro-batch's row carries the complete fold)."""
-    q = (
-        ewma_stream(
-            spark,
-            stream_dir or _events_stream_dir(sf_dir),
-            max_files_per_trigger=max_files_per_trigger,
-        )
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    """Drain the backlog; return the FINAL row per user (update mode
+    emits one row per touched user per micro-batch — the last
+    micro-batch's row carries the complete fold)."""
+    stream = ewma_stream(
+        spark,
+        stream_dir or linked_stream_dir(sf_dir, "events"),
+        max_files_per_trigger=max_files_per_trigger,
     )
-    q.awaitTermination()
-    # keep the highest-n row per user = the final state emission
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        spark.table(table)
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-    )
+    return final_updates(drain_to_memory(stream, table, "update"), "user_id")

@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 
 from ..operators.audit import EVENT_TYPE_DOMAIN
 from ..sources import load_table
-from .events_stream import _events_stream_dir, events_stream_source
+from .events_stream import events_stream_source
+from .feeds import drain_to_memory, linked_stream_dir
 
 
 def violation_profile(events: DataFrame) -> DataFrame:
@@ -54,16 +55,6 @@ def batch_violation_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_expectations_stream_demo(
     spark: SparkSession, sf_dir: str, table: str = "expectations_stream_demo"
 ) -> DataFrame:
-    """Drain the events feed with availableNow; return the live
-    violation counters."""
-    stream = events_stream_source(spark, _events_stream_dir(sf_dir))
-    q = (
-        violation_profile(stream)
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table)
+    """Drain the events feed; return the live violation counters."""
+    stream = events_stream_source(spark, linked_stream_dir(sf_dir, "events"))
+    return drain_to_memory(violation_profile(stream), table, "complete")

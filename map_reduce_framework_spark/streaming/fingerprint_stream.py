@@ -35,16 +35,18 @@ from ..sources import load_table
 from .cleaning_stream import _run_map_only
 
 
-def fingerprint_bands(docs: DataFrame) -> DataFrame:
+def fingerprint_bands(docs: DataFrame, n_hint: int | None = None) -> DataFrame:
     """Both modalities' band tables over any docs frame with a
-    ``doc_id`` column — shared by the batch twin and the stream (no
-    ``n_hint``: the size-aware fan-out needs ``df.rdd``, which a
-    streaming frame forbids; a stream's micro-batches arrive already
-    split)."""
-    ib = image_ahash_bands(image_corpus(docs)).withColumn(
+    ``doc_id`` column — shared by the batch twin, the stream and the
+    media ingest loop.  ``n_hint`` (the corpus row count) turns on the
+    size-aware fan-out; only a batch frame may pass it, because that
+    fan-out needs ``df.rdd``, which a streaming frame forbids (a
+    stream's micro-batches arrive already split)."""
+    hint = n_hint // 3 if n_hint else None
+    ib = image_ahash_bands(image_corpus(docs, n_hint=hint)).withColumn(
         "modality", F.lit("image")
     )
-    ab = audio_delta_bands(audio_corpus(docs)).withColumn(
+    ab = audio_delta_bands(audio_corpus(docs, n_hint=hint)).withColumn(
         "modality", F.lit("audio")
     )
     return ib.unionByName(ab)

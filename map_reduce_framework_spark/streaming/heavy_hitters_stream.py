@@ -35,11 +35,9 @@ No counterpart in the reference (SURVEY §2.4 streaming extension).
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,13 +48,7 @@ from ..operators.text import (
     _exact_recount,
     _mg_candidates,
 )
-
-_DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-
-def _work_dir(feed_key: str, stream_id: str = "default") -> str:
-    tag = hashlib.md5(f"{feed_key}:{stream_id}".encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"mrfs_hh_stream_{tag}")
+from .feeds import DOCS_SCHEMA, docs_feed, drain_each_batch, fixture_dir
 
 
 def _summary_path(work_dir: str, batch_id: int) -> str:
@@ -105,11 +97,11 @@ def merge_batch(
 
 def _split_feed_dir(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str:
     """The documents table split into ``n_files`` parquet files so the
-    availableNow drain delivers it in n_files micro-batches (exactly
-    once — redelivery idempotence is the epoch-replay test's job)."""
+    drain delivers it in n_files micro-batches (exactly once —
+    redelivery idempotence is the epoch-replay test's job)."""
     from ..sources import load_table
 
-    d = _work_dir(sf_dir, "feed")
+    d = fixture_dir("hh_feed", sf_dir)
     if os.path.exists(d):
         shutil.rmtree(d)
     load_table(spark, sf_dir, "documents").repartition(n_files).write.mode(
@@ -131,22 +123,13 @@ def run_streaming_heavy_hitters_demo(
     (stream-equals-batch tested)."""
     if feed_dir is None:
         feed_dir = _split_feed_dir(spark, sf_dir)
-    work = _work_dir(feed_dir, "summaries")
+    work = fixture_dir("hh_summaries", feed_dir)
     if os.path.exists(work):
         shutil.rmtree(work)
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
+    drain_each_batch(
+        docs_feed(spark, feed_dir),
+        lambda bdf, bid: merge_batch(bdf, work, bid, counters),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: merge_batch(bdf, work, bid, counters)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     last = max(
         int(f.rsplit("_", 1)[1].split(".")[0])
         for f in os.listdir(work)
@@ -156,5 +139,5 @@ def run_streaming_heavy_hitters_demo(
     cands = spark.createDataFrame(
         [(t,) for t in sorted(summary)], "token string"
     )
-    docs = spark.read.schema(_DOCS_SCHEMA).parquet(feed_dir)
+    docs = spark.read.schema(DOCS_SCHEMA).parquet(feed_dir)
     return _exact_recount(docs, cands, k)

@@ -9,7 +9,7 @@ by at most 6 hours.  Here BOTH sides are streams:
   buffered click state once the purchase-side watermark passes
   ``click.ts + 6h`` — bounded state, the core requirement for an
   unbounded 100 TB/day stream join,
-- ``availableNow`` drains the backlog once, making the demo
+- the drain (:mod:`.feeds`) takes the backlog once, making the demo
   deterministic: its output must equal the batch join exactly (tested in
   tests/test_streaming.py).
 
@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events_stream import _events_stream_dir, events_stream_source
+from .events_stream import events_stream_source
+from .feeds import drain_to_memory, linked_stream_dir
 
 
 def _typed_stream(
@@ -34,7 +35,7 @@ def _typed_stream(
 ) -> DataFrame:
     return events_stream_source(
         spark,
-        stream_dir or _events_stream_dir(sf_dir),
+        stream_dir or linked_stream_dir(sf_dir, "events"),
         max_files_per_trigger=max_files_per_trigger,
     ).where(F.col("event_type") == event_type)
 
@@ -89,15 +90,7 @@ def run_interval_join_demo(
     stream_dir: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Drain the stream join with availableNow; return the memory-sink
-    table as a batch DataFrame."""
+    """Drain the stream join; return the memory-sink table as a batch
+    DataFrame."""
     joined = streaming_interval_join(spark, sf_dir, stream_dir, max_files_per_trigger)
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table)
+    return drain_to_memory(joined, table, "append")

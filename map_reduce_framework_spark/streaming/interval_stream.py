@@ -14,8 +14,8 @@ final row per (user, island) equals the batch operator's bit-exactly
 (integer seconds arithmetic everywhere — no floats to reorder).
 
 Ordering contract: same as the EWMA twin — the feed must deliver a
-key's rows in event order ACROSS micro-batches (time-split files under
-``availableNow``); within-batch disorder is repaired by the per-batch
+key's rows in event order ACROSS micro-batches (time-split files in
+one drain); within-batch disorder is repaired by the per-batch
 sort.  Two same-second events are break-order-insensitive here (equal
 starts can never straddle a gap), so this fold is strictly more
 tolerant than the EWMA's.
@@ -36,7 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.relational_ext import INTERVAL_BASE_S, INTERVAL_SPAN_S
-from .events_stream import _events_stream_dir, events_stream_source
+from .events_stream import events_stream_source
+from .feeds import drain_to_memory, final_updates, linked_stream_dir
 
 OUTPUT_SCHEMA = (
     "user_id long, island long, island_start long, island_end long,"
@@ -116,30 +117,13 @@ def run_interval_stream_demo(
     stream_dir: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Drain the backlog with availableNow; return the FINAL row per
-    (user, island) — an island row re-emits each time a batch grows it,
-    so the last (= max n_events) emission carries the closed value."""
-    q = (
-        interval_stream(
-            spark,
-            stream_dir or _events_stream_dir(sf_dir),
-            max_files_per_trigger=max_files_per_trigger,
-        )
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    """Drain the backlog; return the FINAL row per (user, island) — an
+    island row re-emits each time a batch grows it, so the last
+    (= max n_events) emission carries the closed value."""
+    stream = interval_stream(
+        spark,
+        stream_dir or linked_stream_dir(sf_dir, "events"),
+        max_files_per_trigger=max_files_per_trigger,
     )
-    q.awaitTermination()
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id", "island").orderBy(
-        F.col("n_events").desc()
-    )
-    return (
-        spark.table(table)
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-    )
+    updates = drain_to_memory(stream, table, "update")
+    return final_updates(updates, "user_id", "island")

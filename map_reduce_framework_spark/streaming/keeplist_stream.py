@@ -25,10 +25,8 @@ views (true at every test SF; the parity pytest pins it).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,8 +40,7 @@ from ..operators.dedup import (
 )
 from ..functions import rnd
 from ..sources import load_table
-
-_DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+from .feeds import docs_feed, doubled_new_docs_dir, drain_each_batch, fixture_dir
 
 
 def _work_dir(sf_dir: str, leaf: str, stream_id: str = "default") -> str:
@@ -53,8 +50,7 @@ def _work_dir(sf_dir: str, leaf: str, stream_id: str = "default") -> str:
     would silently overwrite the first's per-batch growth output.  The
     index/growth layout is single-writer per (sf_dir, stream_id): run
     concurrent pipelines under distinct stream ids."""
-    tag = hashlib.md5(f"{sf_dir}#{stream_id}".encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"mrfs_keeplist_{leaf}_{tag}")
+    return fixture_dir(f"keeplist_{leaf}", f"{sf_dir}#{stream_id}")
 
 
 def build_corpus_index(
@@ -425,30 +421,6 @@ def _screen_batch(
         bsh.unpersist()
 
 
-def _doubled_new_docs_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stream dir delivering every NEW document exactly twice (two files
-    with the same content — the at-least-once redelivery fixture)."""
-    d = _work_dir(sf_dir, "feed")
-    if os.path.exists(d):
-        shutil.rmtree(d)
-    new_docs = (
-        load_table(spark, sf_dir, "documents").where(_incr_is_new()).coalesce(1)
-    )
-    for name in ("a", "b"):
-        new_docs.write.mode("overwrite").parquet(os.path.join(d, "_stage"))
-        staged = [
-            f
-            for f in os.listdir(os.path.join(d, "_stage"))
-            if f.endswith(".parquet")
-        ]
-        os.rename(
-            os.path.join(d, "_stage", staged[0]),
-            os.path.join(d, f"docs_{name}.parquet"),
-        )
-    shutil.rmtree(os.path.join(d, "_stage"))
-    return d
-
-
 def run_streaming_keeplist_demo(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -460,22 +432,10 @@ def run_streaming_keeplist_demo(
     verdict_dir = _work_dir(sf_dir, "verdicts")
     if os.path.exists(verdict_dir):
         shutil.rmtree(verdict_dir)
-    feed = _doubled_new_docs_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    drain_each_batch(
+        docs_feed(spark, doubled_new_docs_dir(spark, sf_dir, "keeplist_feed")),
+        lambda bdf, bid: _screen_batch(spark, bdf, index, verdict_dir, batch_id=bid),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: _screen_batch(
-                spark, bdf, index, verdict_dir, batch_id=bid
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     verdicts = spark.read.parquet(verdict_dir)
     v = F.col("verdict")
     return (

@@ -14,9 +14,10 @@ Topology per micro-batch (``foreachBatch``):
 1. redelivered doc_ids drop against the verdict table (anti-join);
 2. band tables compute through the SAME builders as the batch twin
    (real PNG/WAV encode → decode → fingerprint → 4×16-bit bands);
-3. the asymmetric new×old screen is the modality-scoped band-key
+3. the asymmetric new×old screen is the batch twin's own band-key
    equi-join at the shared lossless ham ≤ 3 verify
-   (:func:`~..operators.multimodal._banded_hamming_hits` semantics);
+   (:func:`~..operators.multimodal._banded_hamming_hits`), run once
+   per modality;
 4. KEPT items' band rows land in a per-batch growth dir
    ``b<batch_id>/`` (stable checkpoint id ⇒ overwrite-idempotent);
 5. verdicts append LAST — a crash anywhere earlier leaves the batch
@@ -33,48 +34,19 @@ reference (SURVEY §2.4 extension; multimodal family, ingest axis).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _incr_is_new
-from ..operators.multimodal import (
-    PHASH_BANDS,
-    PHASH_MAX_HAMMING,
-    audio_corpus,
-    audio_delta_bands,
-    image_ahash_bands,
-    image_corpus,
-)
+from ..operators.multimodal import _banded_hamming_hits
 from ..sources import load_table
 from ..sources.tables import table_row_count
-from .keeplist_stream import _DOCS_SCHEMA, _read_index_side
-
-
-def _work_dir(sf_dir: str, leaf: str, stream_id: str = "default") -> str:
-    """Per-(corpus, stream) working dir — single-writer per
-    (sf_dir, stream_id), same contract as the keeplist twin's."""
-    tag = hashlib.md5(f"{sf_dir}#{stream_id}".encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"mrfs_mediafp_{leaf}_{tag}")
-
-
-def _batch_bands(docs: DataFrame, n_hint: int | None = None) -> DataFrame:
-    """Both modalities' band tables with the size-aware fan-out the
-    BATCH side can afford (a streaming frame forbids ``df.rdd``, so the
-    foreachBatch path passes ``n_hint=None`` and lets the micro-batch's
-    own partitioning stand)."""
-    hint = n_hint // 3 if n_hint else None
-    ib = image_ahash_bands(image_corpus(docs, n_hint=hint)).withColumn(
-        "modality", F.lit("image")
-    )
-    ab = audio_delta_bands(audio_corpus(docs, n_hint=hint)).withColumn(
-        "modality", F.lit("audio")
-    )
-    return ib.unionByName(ab)
+from .feeds import docs_feed, doubled_new_docs_dir, drain_each_batch, fixture_dir
+from .fingerprint_stream import fingerprint_bands
+from .keeplist_stream import _read_index_side
 
 
 def build_media_band_index(
@@ -83,62 +55,25 @@ def build_media_band_index(
     """Materialize the corpus-side band index once: (doc_id, modality,
     b0..b3) of the already-ingested (old) partition — exactly the
     skinny table a production pipeline keeps between runs."""
-    path = _work_dir(sf_dir, "bands", stream_id)
+    path = fixture_dir("mediafp_bands", f"{sf_dir}#{stream_id}")
     docs = load_table(spark, sf_dir, "documents").where(~_incr_is_new())
     n = table_row_count(spark, sf_dir, "documents")
-    _batch_bands(docs, n_hint=n).write.mode("overwrite").parquet(path)
+    fingerprint_bands(docs, n_hint=n).write.mode("overwrite").parquet(path)
     return {"bands": path}
 
 
-def _mm_chunks(bands: DataFrame) -> DataFrame:
-    """Band-key rows with the MODALITY embedded in the key, so the
-    new×old equi-join can never pair an image with an audio item —
-    the streaming equivalent of the batch twin's per-modality screens."""
-    return bands.select(
-        "doc_id",
-        "modality",
-        "b0",
-        "b1",
-        "b2",
-        "b3",
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":",
-                        F.col("modality"),
-                        F.lit(k),
-                        F.col(f"b{k}").cast("string"),
-                    )
-                    for k in range(PHASH_BANDS)
-                ]
-            )
-        ).alias("band_key"),
-    )
-
-
-def _mm_hits(new_bands: DataFrame, old_bands: DataFrame) -> DataFrame:
+def _media_hits(new_bands: DataFrame, old_bands: DataFrame) -> DataFrame:
     """Distinct NEW (doc_id, modality) within ham ≤ 3 of any indexed
-    item of the same modality — lossless-at-ham≤3 pigeonhole banding,
-    identical math to the batch screen."""
-    a = _mm_chunks(new_bands).alias("a")
-    b = _mm_chunks(old_bands).alias("b")
-    hamming = sum(
-        F.bit_count(F.col(f"a.b{k}").bitwiseXOR(F.col(f"b.b{k}")))
-        for k in range(PHASH_BANDS)
+    item of the same modality: the batch twin's banded screen, run once
+    per modality, so an image never pairs with an audio item."""
+    image, audio = (
+        _banded_hamming_hits(
+            new_bands.where(F.col("modality") == m),
+            old_bands.where(F.col("modality") == m),
+        ).withColumn("modality", F.lit(m))
+        for m in ("image", "audio")
     )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (hamming <= PHASH_MAX_HAMMING),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("a.modality").alias("modality"),
-        )
-        .distinct()
-    )
+    return image.unionByName(audio)
 
 
 def _screen_media_batch(
@@ -169,12 +104,12 @@ def _screen_media_batch(
     if os.path.exists(verdict_dir):
         seen = spark.read.parquet(verdict_dir).select("doc_id")
         batch = batch.join(seen, "doc_id", "left_anti")
-    new_bands = _batch_bands(batch).persist()
+    new_bands = fingerprint_bands(batch).persist()
     try:
         if new_bands.count() == 0:
             return
         old_bands = _read_index_side(spark, index["bands"], exclude_tag=tag)
-        hits = _mm_hits(new_bands, old_bands).withColumn("is_dup", F.lit(1))
+        hits = _media_hits(new_bands, old_bands).withColumn("is_dup", F.lit(1))
         dup = F.coalesce("is_dup", F.lit(0))
         verdicts = (
             new_bands.select("doc_id", "modality")
@@ -208,30 +143,6 @@ def _screen_media_batch(
         new_bands.unpersist()
 
 
-def _doubled_new_docs_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stream dir delivering every NEW document exactly twice (the
-    at-least-once redelivery fixture, keeplist shape)."""
-    d = _work_dir(sf_dir, "feed")
-    if os.path.exists(d):
-        shutil.rmtree(d)
-    new_docs = (
-        load_table(spark, sf_dir, "documents").where(_incr_is_new()).coalesce(1)
-    )
-    for name in ("a", "b"):
-        new_docs.write.mode("overwrite").parquet(os.path.join(d, "_stage"))
-        staged = [
-            f
-            for f in os.listdir(os.path.join(d, "_stage"))
-            if f.endswith(".parquet")
-        ]
-        os.rename(
-            os.path.join(d, "_stage", staged[0]),
-            os.path.join(d, f"docs_{name}.parquet"),
-        )
-    shutil.rmtree(os.path.join(d, "_stage"))
-    return d
-
-
 def run_streaming_media_ingest_demo(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -240,25 +151,15 @@ def run_streaming_media_ingest_demo(
     ``dedup_media_incremental``'s exact shape (modality, n_new, n_dup,
     n_kept) for stream-equals-batch comparison."""
     index = build_media_band_index(spark, sf_dir)
-    verdict_dir = _work_dir(sf_dir, "verdicts")
+    verdict_dir = fixture_dir("mediafp_verdicts", f"{sf_dir}#default")
     if os.path.exists(verdict_dir):
         shutil.rmtree(verdict_dir)
-    feed = _doubled_new_docs_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    drain_each_batch(
+        docs_feed(spark, doubled_new_docs_dir(spark, sf_dir, "mediafp_feed")),
+        lambda bdf, bid: _screen_media_batch(
+            spark, bdf, index, verdict_dir, batch_id=bid
+        ),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: _screen_media_batch(
-                spark, bdf, index, verdict_dir, batch_id=bid
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     verdicts = spark.read.parquet(verdict_dir)
     v = F.col("verdict")
     return (

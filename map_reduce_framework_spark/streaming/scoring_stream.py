@@ -22,27 +22,7 @@ from pyspark.sql import functions as F
 from ..functions import rnd
 from ..sources import load_table
 from ..operators.text import _stopword_counts
-
-DOCS_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
-
-
-def _docs_stream_dir(sf_dir: str) -> str:
-    """Expose the single documents parquet as a stream-source directory
-    (same symlink pattern as events_stream)."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"mrfs_docs_stream_{tag}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "documents.parquet"), link)
-    return d
-
+from .feeds import docs_feed, drain_to_memory, linked_stream_dir
 
 def lang_quality_profile(docs: DataFrame) -> DataFrame:
     """Per-language quality profile via the shared Arrow stopword
@@ -65,22 +45,9 @@ def lang_quality_profile(docs: DataFrame) -> DataFrame:
 def run_scoring_stream_demo(
     spark: SparkSession, sf_dir: str, table: str = "scoring_stream_demo"
 ) -> DataFrame:
-    """Drain the documents feed with availableNow; return the profile."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .format("parquet")
-        .load(_docs_stream_dir(sf_dir))
-    )
-    q = (
-        lang_quality_profile(stream)
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table)
+    """Drain the documents feed; return the profile."""
+    stream = docs_feed(spark, linked_stream_dir(sf_dir, "documents"))
+    return drain_to_memory(lang_quality_profile(stream), table, "complete")
 
 
 def batch_twin(spark: SparkSession, sf_dir: str) -> DataFrame:

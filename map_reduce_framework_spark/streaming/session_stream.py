@@ -6,8 +6,8 @@ Session windows are the canonical *stateful merging* window: state per
 (user, open-session) merges as events arrive and is emitted once the
 watermark passes the session's close (start of the next gap).  State is
 bounded by (open sessions in the watermark horizon) — the only
-formulation that survives an unbounded stream.  `availableNow` +
-`complete` drain makes the demo deterministic: output must equal the
+formulation that survives an unbounded stream.  A complete-mode
+drain of the backlog makes the demo deterministic: output must equal the
 batch twin exactly (tested).
 """
 
@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import rnd
-from .events_stream import _events_stream_dir, events_stream_source
+from .events_stream import events_stream_source
+from .feeds import drain_to_memory, linked_stream_dir
 
 
 def streaming_session_windows(
@@ -25,7 +26,7 @@ def streaming_session_windows(
 ) -> DataFrame:
     from ..operators.relational_ext import SESSION_GAP_MINUTES
 
-    stream = events_stream_source(spark, _events_stream_dir(sf_dir))
+    stream = events_stream_source(spark, linked_stream_dir(sf_dir, "events"))
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(
@@ -49,13 +50,5 @@ def streaming_session_windows(
 def run_session_stream_demo(
     spark: SparkSession, sf_dir: str, table: str = "session_stream_demo"
 ) -> DataFrame:
-    q = (
-        streaming_session_windows(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table)
+    stream = streaming_session_windows(spark, sf_dir)
+    return drain_to_memory(stream, table, "complete")

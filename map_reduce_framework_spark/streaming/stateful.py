@@ -5,9 +5,9 @@ This is the Structured-Streaming analogue of the reference's "reduce sees
 the whole group" semantics (SURVEY §2.3f) carried into unbounded streams:
 state holds the running (count, sum, max_ts) per user_id across
 micro-batches; each batch folds its rows into state and emits the updated
-row.  With the ``availableNow`` trigger the whole backlog drains in one
-run, so the final emitted state equals the batch group-by — which is
-exactly what the test asserts.
+row.  The drain (:mod:`.feeds`) takes the whole backlog in one run, so
+the final emitted state equals the batch group-by — which is exactly
+what the test asserts.
 
 At scale: state lives in the state store (RocksDB in prod), partitioned
 by the grouping key; timeouts (``GroupStateTimeout``) bound state size for
@@ -18,13 +18,14 @@ finite backlog.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .events_stream import _events_stream_dir, events_stream_source
+from .events_stream import events_stream_source
+from .feeds import drain_to_memory, final_updates, linked_stream_dir
 
 # last_ts is epoch-micros: state rows must be Arrow-serializable scalars,
 # so the timestamp crosses into state as a long
@@ -59,11 +60,9 @@ def _update_user_state(
 
 def user_running_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-user running stats (update mode)."""
-    from pyspark.sql import functions as F
-
-    stream = events_stream_source(spark, _events_stream_dir(sf_dir)).withColumn(
-        "ts", F.unix_micros("ts")
-    )
+    stream = events_stream_source(
+        spark, linked_stream_dir(sf_dir, "events")
+    ).withColumn("ts", F.unix_micros("ts"))
     return stream.groupBy("user_id").applyInPandasWithState(
         _update_user_state,
         outputStructType=OUTPUT_SCHEMA,
@@ -76,25 +75,7 @@ def user_running_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_user_stats_demo(
     spark: SparkSession, sf_dir: str, table: str = "user_stats_demo"
 ) -> DataFrame:
-    """Drain the backlog with availableNow; return final per-user rows
-    (last update per user wins if multiple micro-batches fired)."""
-    q = (
-        user_running_stats_stream(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    # keep the last emitted update per user (n_events monotone in updates)
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        spark.table(table)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-    )
+    """Drain the backlog; return final per-user rows (last update per
+    user wins if multiple micro-batches fired)."""
+    stream = user_running_stats_stream(spark, sf_dir)
+    return final_updates(drain_to_memory(stream, table, "update"), "user_id")

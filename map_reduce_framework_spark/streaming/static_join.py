@@ -8,8 +8,8 @@ with the batch API and explicitly broadcast, so each micro-batch does a
 map-side hash join: the stream never shuffles for the join, which is the
 100 TB shape (the dimension ships to executors; the firehose stays put).
 
-``availableNow`` drains the backlog once, making the demo deterministic:
-its result must equal the batch twin
+The drain (:mod:`.feeds`) takes the backlog once, making the demo
+deterministic: its result must equal the batch twin
 :func:`..operators.relational_ext.events_user_enrichment` exactly
 (asserted in ``tests/test_streaming.py``).  No watermark is needed — the
 join side is static and the aggregation runs in complete mode.
@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table
-from .events_stream import _events_stream_dir, events_stream_source
+from .events_stream import events_stream_source
+from .feeds import drain_to_memory, linked_stream_dir
 
 
 def streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -32,7 +33,7 @@ def streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.date_trunc("day", F.min("ts")).alias("first_day"))
     )
-    stream = events_stream_source(spark, _events_stream_dir(sf_dir))
+    stream = events_stream_source(spark, linked_stream_dir(sf_dir, "events"))
     return (
         stream.join(F.broadcast(profile), "user_id")
         .groupBy("event_type", "first_day")
@@ -43,14 +44,6 @@ def streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_static_join_demo(
     spark: SparkSession, sf_dir: str, table: str = "static_join_demo"
 ) -> DataFrame:
-    """Drain the stream with availableNow; return the in-memory result."""
+    """Drain the stream; return the in-memory result."""
     agg = streaming_enriched_counts(spark, sf_dir)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table)
+    return drain_to_memory(agg, table, "complete")

@@ -57,12 +57,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup_stream import streaming_dedup
+from .feeds import drain_each_batch, fixture_dir
 
 _MARKER = "_committed_batch"
 
@@ -200,21 +200,13 @@ def run_upsert_sink_demo(
     per-run temp checkpoint, so the table is recreated fresh each run
     (table and checkpoint live and die together — the lineage contract
     in the module docstring)."""
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    table_dir = os.path.join(tempfile.gettempdir(), f"mrfs_upsert_table_{tag}")
+    table_dir = fixture_dir("upsert_table", sf_dir)
     for leftover in (table_dir, table_dir + ".old", table_dir + ".next"):
         if os.path.exists(leftover):
             shutil.rmtree(leftover)  # fresh demo run
 
-    stream = streaming_dedup(spark, sf_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: _merge_batch(spark, bdf, table_dir, batch_id=bid)
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain_each_batch(
+        streaming_dedup(spark, sf_dir),
+        lambda bdf, bid: _merge_batch(spark, bdf, table_dir, batch_id=bid),
     )
-    q.awaitTermination()
     return read_upsert_table(spark, table_dir)

@@ -120,3 +120,73 @@ def test_failed_unpersist_is_logged_and_not_counted(caplog):
     (rec,) = caplog.records
     assert rec.levelname == "DEBUG"
     assert "session stopped" in str(rec.exc_info[1])
+
+
+def test_shared_plan_cache_lives_while_any_owner_does(spark):
+    """Spark keys a cache by plan, so two owners that adopted persists
+    of the same plan share one cache entry: dropping the first owner
+    must leave it cached for the second, and dropping the second must
+    release it."""
+
+    def plan():
+        return spark.range(1000).selectExpr("id * 7 AS x")
+
+    def owner():
+        cache.persist_tracked(plan())
+        return cache.adopt(spark.range(1))
+
+    first, second = owner(), owner()
+    del first
+    gc.collect()
+    assert plan().storageLevel.useMemory, "first owner's drop uncached the second's"
+    del second
+    gc.collect()
+    assert not plan().storageLevel.useMemory, "cache outlived both owners"
+
+
+def test_staging_loses_no_persist_under_threads(spark):
+    """Threads that stage, adopt and drop at once (more threads than
+    cores, a short switch interval) lose no persist: once every owner is
+    gone and the leftovers are released, none of the plans is cached
+    and no adopted list is left."""
+    import sys
+    import threading
+
+    n_threads, rounds = 8, 5
+
+    def plan(t, i):
+        return spark.range(10 + t * rounds + i)  # one plan per (t, i)
+
+    errors = []
+
+    def work(t):
+        try:
+            for i in range(rounds):
+                cache.persist_tracked(plan(t, i))
+                owner = cache.adopt(spark.range(1))
+                del owner  # runs the finalizer on this thread
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    cache.release()
+    gc.collect()
+    assert cache._ADOPTED == {}
+    cached = [
+        (t, i)
+        for t in range(n_threads)
+        for i in range(rounds)
+        if plan(t, i).storageLevel.useMemory
+    ]
+    assert cached == []

@@ -3,10 +3,13 @@ must equal the batch events_time_window on the same data."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 
 from map_reduce_framework_spark.operators.relational import events_time_window
 from map_reduce_framework_spark.streaming import run_events_stream_demo
+from map_reduce_framework_spark.streaming.feeds import DOCS_SCHEMA
 
 from .conftest import SF_DIR
 
@@ -272,7 +275,7 @@ def test_streaming_keeplist_exactly_once_across_restart(spark, tmp_path):
 
     def drain() -> None:
         stream = (
-            spark.readStream.schema(ks._DOCS_SCHEMA)
+            spark.readStream.schema(DOCS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
@@ -360,7 +363,7 @@ def test_streaming_keeplist_catches_intra_stream_duplicate(spark, tmp_path):
 
     def drain() -> None:
         stream = (
-            spark.readStream.schema(ks._DOCS_SCHEMA)
+            spark.readStream.schema(DOCS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
@@ -1080,7 +1083,7 @@ def test_streaming_media_ingest_exactly_once_across_restart(spark, tmp_path):
 
     def drain() -> None:
         stream = (
-            spark.readStream.schema(ms._DOCS_SCHEMA)
+            spark.readStream.schema(DOCS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
@@ -1148,7 +1151,7 @@ def test_streaming_media_ingest_catches_intra_stream_duplicate(
 
         stage = str(tmp_path / "_stage")
         spark.createDataFrame(
-            [(doc_id, "synthetic", "en", "syn", 9)], ms._DOCS_SCHEMA
+            [(doc_id, "synthetic", "en", "syn", 9)], DOCS_SCHEMA
         ).coalesce(1).write.mode("overwrite").parquet(stage)
         part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
         os.rename(os.path.join(stage, part), os.path.join(feed, name))
@@ -1156,7 +1159,7 @@ def test_streaming_media_ingest_catches_intra_stream_duplicate(
 
     def drain() -> None:
         stream = (
-            spark.readStream.schema(ms._DOCS_SCHEMA)
+            spark.readStream.schema(DOCS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
@@ -1181,3 +1184,53 @@ def test_streaming_media_ingest_catches_intra_stream_duplicate(
         for r in spark.read.parquet(verdict_dir).collect()
     }
     assert rows == {x_id: "kept", y_id: "near_dup"}
+
+
+def test_media_screen_keeps_modalities_apart(spark):
+    """The media stream's band screen pairs items of one modality only:
+    an image and an audio row with equal bands are no hit, while two
+    image rows within Hamming distance 3 are."""
+    from map_reduce_framework_spark.streaming.media_ingest_stream import (
+        _media_hits,
+    )
+
+    schema = "doc_id long, modality string, b0 long, b1 long, b2 long, b3 long"
+    old = spark.createDataFrame(
+        [(1, "image", 5, 6, 7, 8), (2, "audio", 100, 200, 300, 400)], schema
+    )
+    new = spark.createDataFrame(
+        [
+            (10, "image", 100, 200, 300, 400),  # equal to the audio row
+            (11, "image", 5, 6, 7, 8 ^ 0b111),  # 3 bits from image 1
+            (12, "image", 5, 6, 7, 8 ^ 0b1111),  # 4 bits from image 1
+        ],
+        schema,
+    )
+    hits = {(r["doc_id"], r["modality"]) for r in _media_hits(new, old).collect()}
+    assert hits == {(11, "image")}
+
+
+def test_streaming_drains_and_fixture_dirs_live_in_feeds():
+    """Every demo drains through ``feeds`` and takes its temp dirs from
+    ``feeds.fixture_dir``: an available-now trigger or a
+    ``tempfile.gettempdir()`` call anywhere else in the package is a new
+    copy of that plumbing."""
+    from map_reduce_framework_spark.streaming import feeds
+
+    pkg = os.path.dirname(feeds.__file__)
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg, "*.py"))):
+        if path == feeds.__file__:
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            drain = isinstance(node, ast.keyword) and node.arg == "availableNow"
+            tmp = (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "gettempdir"
+            )
+            if drain or tmp:
+                offenders.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert not offenders, f"drain or temp dir outside feeds.py: {offenders}"
